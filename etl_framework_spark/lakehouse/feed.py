@@ -6,9 +6,11 @@ plan regardless of how the format stores its metadata: read ONLY the
 buckets whose file lists differ between the versions (copy-on-write
 rewrites whole buckets, so identical file list ⇒ identical content),
 then one full-outer join on the key classifies each changed key as
-I / U / D. Each format supplies the changed-bucket set from its own
-metadata (LakeTable: snapshot/shard references; DirTable: commit-log
-fold) — the join itself lives here, once.
+I / U / D. ``BucketTable.changes_between`` (the data plane LakeTable
+and DirTable share) computes the changed-bucket set from the state
+views of the two versions — LakeTable loads only the manifest shards
+whose reference moved — and hands it here; the Iceberg adapter
+supplies its own. The join itself lives here, once.
 
 reference parity: the reference has no CDC-out surface; this mirrors
 Delta's ``table_changes`` / Iceberg's changelog scan shape so a
@@ -51,7 +53,7 @@ def delta_interval_suffix(
 
 
 def delta_fast_path(old_map: dict, new_map: dict, read_files):
-    """Shared fast-path plumbing for both formats' ``changes_between``:
+    """Fast-path plumbing for ``changes_between``:
     detect a purely-additive delta interval and read its appended rows
     with ``_seq``. Returns ``(delta_rows, entries)`` or ``(None,
     None)``. ``read_files(entries)`` is the format's own reader — one
@@ -237,8 +239,8 @@ def diff_versions(
 
     new = table.current(buckets=changed_buckets, version=v_to)
     # the interval may span a schema evolution: the older version's
-    # rows can predate ``_lsn``/added columns (DirTable time-travel
-    # serves each version under ITS schema) — align the old side to the
+    # rows can predate ``_lsn``/added columns (time travel serves each
+    # version under ITS schema) — align the old side to the
     # newer shape so the diff below is well-formed either way
     old = align_to_schema(
         table.current(buckets=changed_buckets, version=v_from), new.schema

@@ -490,8 +490,6 @@ class IcebergTable:
         evolve_schema: T.StructType | None = None,
         summary: dict | None = None,
         epoch: tuple[str, int] | None = None,
-        touched: list[int] | None = None,
-        on_conflict: str = "raise",
         mode: str | None = None,
     ) -> int | None:
         """Copy-on-write merge: resolve against the touched buckets,
@@ -507,8 +505,7 @@ class IcebergTable:
         if epoch is not None and epoch[1] <= self.last_epoch(epoch[0]):
             return None
         schema = self._ensure_schema(evolve_schema or source.schema)
-        if touched is None:
-            touched = self.touched_buckets(source)
+        touched = self.touched_buckets(source)
         target_subset = align_to_schema(self.read(buckets=touched), schema)
         resolved = resolve(target_subset, source)
         aligned = align_to_schema(resolved.drop("_bucket"), schema)

@@ -2,11 +2,17 @@
 
 ``KeyedTable`` is the protocol every component in this repo programs
 against (``cdc.apply_changes``, ``streaming.start_ingest``, the load
-strategies, the pipeline loaders). ``LakeTable`` implements it with the
-self-contained bucket/manifest format; a real Iceberg catalog satisfies
-it 1:1 — see ``docs/ICEBERG_ADAPTER.md`` for the per-method mapping and
-the exactly-once/epoch translation. Swapping formats is a constructor
+strategies, the pipeline loaders). The two in-repo formats, ``LakeTable``
+(snapshot manifests) and ``DirTable`` (a commit log), share one data
+plane, ``table.BucketTable``, and differ only in their metadata log.
+``IcebergTable`` implements the protocol on a real Iceberg catalog —
+see ``docs/ICEBERG_ADAPTER.md`` for the per-method mapping and the
+exactly-once/epoch translation. Swapping formats is a constructor
 change, not an engine change.
+
+``delete_where`` and ``compact_tombstones`` are not part of the
+protocol: both in-repo formats have them through the shared data plane,
+but the Iceberg adapter does not.
 """
 
 from __future__ import annotations
@@ -101,8 +107,6 @@ class KeyedTable(Protocol):
         evolve_schema: T.StructType | None = None,
         summary: dict | None = None,
         epoch: tuple[str, int] | None = None,
-        touched: list[int] | None = None,
-        on_conflict: str = "raise",
         mode: str | None = None,
     ) -> int | None:
         """Keyed merge; ``resolve(target_subset, source)`` owns row
@@ -112,7 +116,9 @@ class KeyedTable(Protocol):
         ``"mor"`` appends resolved delta files folded at read
         (``resolve`` then receives an EMPTY target and must emit
         tombstones for deletes). Default follows ``merge_policy``.
-        MoR merges return ``None`` when ``epoch`` was already applied."""
+        MoR merges return ``None`` when ``epoch`` was already applied.
+        A CoW merge that finds a touched bucket rewritten concurrently
+        raises ``CommitConflict`` (re-run via ``commit_with_retry``)."""
         ...
 
     # ------------------------------------------------------- maintenance

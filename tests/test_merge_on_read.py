@@ -28,6 +28,7 @@ from etl_framework_spark.lakehouse import (
     DirTable,
     LakeTable,
 )
+from etl_framework_spark.lakehouse.table import BucketDelta
 from etl_framework_spark.schemas import (
     CHANGE_SCHEMA,
     CHANGE_SCHEMA_EVOLVED,
@@ -300,10 +301,10 @@ def test_mor_schema_evolution_mid_stream(spark, tmp_path, impl):
     assert got == {("c1", 0): ("v1", None), ("c1", 1): ("v2", "meta!")}
 
 
-def test_delete_where_folds_mor_history(spark, tmp_path):
+def test_delete_where_folds_mor_history(spark, tmp_path, impl):
     """delete_where on a delta-carrying table must fold first: the kept
     rewrite collapses the bucket (never persists superseded versions)."""
-    t = _mk(LakeTable, spark, tmp_path / "t")
+    t = _mk(impl, spark, tmp_path / "t")
     apply_changes(
         t,
         _ch(spark, [("U", 1, _ts(1), "c1", 0, "user", "old", None)]),
@@ -450,49 +451,57 @@ def test_rebucket_conflicts_with_concurrent_commit(spark, tmp_path, impl):
     t.refresh()
     pre = t.version
     data = t.read()
-    if isinstance(t, LakeTable):
-        sid = t.snapshot.schema_id
-        new_buckets = t._write_data(data, sid, n_buckets=8)
-        # a concurrent writer lands between the read and the commit
-        other = type(t)(spark, path)
-        apply_changes(
-            other,
-            _ch(spark, [("U", 50_000, _ts(50_000), "conv-r", 0, "u", "x", None)]),
-            stream_id="s",
-            epoch_id=1,
+    ref, _ = t._ensure_schema(t.schema)
+    new_buckets = t._write_data(data, ref, n_buckets=8)
+    # a concurrent writer lands between the read and the commit
+    other = type(t)(spark, path)
+    apply_changes(
+        other,
+        _ch(spark, [("U", 50_000, _ts(50_000), "conv-r", 0, "u", "x", None)]),
+        stream_id="s",
+        epoch_id=1,
+    )
+    with pytest.raises(CommitConflict):
+        t._commit(
+            BucketDelta("overwrite", new_buckets),
+            ref,
+            {"operation": "rebucket"},
+            expect_version=pre,
+            n_buckets=8,
         )
-        from etl_framework_spark.lakehouse.table import BucketDelta
-
-        with pytest.raises(CommitConflict):
-            t._commit(
-                BucketDelta("overwrite", new_buckets),
-                sid,
-                {"operation": "rebucket"},
-                expect_version=pre,
-                n_buckets=8,
-            )
-    else:
-        h, schema = t._ensure_schema(t.schema)
-        adds = t._write_data(data, h, schema=schema, n_buckets=8)
-        other = type(t)(spark, path)
-        apply_changes(
-            other,
-            _ch(spark, [("U", 50_000, _ts(50_000), "conv-r", 0, "u", "x", None)]),
-            stream_id="s",
-            epoch_id=1,
-        )
-        with pytest.raises(CommitConflict):
-            t._commit(
-                "overwrite",
-                adds,
-                h,
-                schema,
-                {"operation": "rebucket"},
-                expect_version=pre,
-                n_buckets=8,
-            )
     # the concurrent write survives; state is the full replay
     assert ("conv-r", 0) in _state(type(t)(spark, path))
+
+
+def test_lost_compaction_publishes_nothing(spark, tmp_path, impl):
+    """A keep_fresh rewrite whose every bucket went stale (a concurrent
+    writer rewrote them between the read and the commit) publishes
+    nothing: no new version, no "compact" history entry that a relay
+    would then sync as an empty interval."""
+    path = str(tmp_path / "t")
+    t = _mk(impl, spark, path, policy=None, n_buckets=2)
+    apply_changes(t, gen_changes(spark, 400, seed=4), stream_id="s", epoch_id=0)
+    t.refresh()
+    before = _state(t)
+    expected = {b: list(fs) for b, fs in t._view().buckets.items()}
+    ref, _ = t._ensure_schema(t.schema)
+    new_buckets = t._write_data(t.read(), ref)
+    # a concurrent compaction rewrites every bucket after our read
+    other = type(t)(spark, path)
+    other.compact(min_files=1)
+    head = other.refresh().version
+    v = t._commit(
+        BucketDelta(
+            "replace", new_buckets, expected=expected, on_conflict="keep_fresh"
+        ),
+        ref,
+        {"operation": "compact"},
+    )
+    assert v == head
+    assert t.refresh().version == head
+    ops = [h["summary"].get("operation") for h in t.history()]
+    assert ops.count("compact") == 1
+    assert _state(t) == before
 
 
 def test_rebucket_survives_relay_watermark(spark, tmp_path, impl):
@@ -526,10 +535,7 @@ def test_manifest_entries_record_column_ranges(spark, tmp_path, impl):
     t = _mk(impl, spark, tmp_path / "t", policy=None, n_buckets=4)
     apply_changes(t, gen_changes(spark, 1000, seed=7), stream_id="s", epoch_id=0)
     t.refresh()
-    if isinstance(t, LakeTable):
-        entries = [e for fs in t.snapshot.buckets.values() for e in fs]
-    else:
-        entries = [e for fs in t._state.live.values() for e in fs]
+    entries = [e for fs in t._view().buckets.values() for e in fs]
     assert entries and all("stats" in e for e in entries)
     assert all(
         {"conv_id", "ts", "_lsn"} <= set(e["stats"]) for e in entries
@@ -913,8 +919,8 @@ def test_changes_between_spans_schema_evolution(spark, tmp_path, impl):
     assert got == {k: ("I", v) for k, v in live.items()}
 
 
-def test_compact_tombstones_uses_ts_ranges(spark, tmp_path):
-    t = _mk(LakeTable, spark, tmp_path / "t", policy=None, n_buckets=2)
+def test_compact_tombstones_uses_ts_ranges(spark, tmp_path, impl):
+    t = _mk(impl, spark, tmp_path / "t", policy=None, n_buckets=2)
     apply_changes(
         t,
         _ch(

@@ -100,6 +100,23 @@ def test_time_travel_and_history(spark, tmp_path, impl):
     assert ops[-2:] == ["append", "append"]
 
 
+def test_time_travel_reads_version_schema(spark, tmp_path, impl):
+    """``read(version=v)`` serves v under v's OWN schema: a column added
+    by a later evolution is absent from the pre-evolution version (the
+    time-travel semantics of Delta and Iceberg)."""
+    t = impl.create(spark, str(tmp_path / "t"), SIMPLE, ["id"], n_buckets=2)
+    v1 = t.append(_df(spark, [(1, "a")]))
+    wide = T.StructType(
+        SIMPLE.fields + [T.StructField("extra", T.StringType(), True)]
+    )
+    t.append(spark.createDataFrame([(2, "b", "x")], wide))
+    assert t.schema.fieldNames() == ["id", "v", "extra"]
+    old = t.read(version=v1)
+    assert old.columns == ["id", "v"]
+    assert [(r["id"], r["v"]) for r in old.collect()] == [(1, "a")]
+    assert t.read().columns == ["id", "v", "extra"]
+
+
 def test_epoch_markers_are_exactly_once(spark, tmp_path, impl):
     t = impl.create(spark, str(tmp_path / "t"), SIMPLE, ["id"], n_buckets=2)
     assert t.last_epoch("s") == -1
