@@ -4,8 +4,6 @@ from etl_framework_spark.cdc.apply import (  # noqa: F401
     apply_changes,
     compute_lineage,
     lww_dedupe,
-    lww_dedupe_window,
-    resolve_lww,
     resolve_lww_bucketed,
 )
 from etl_framework_spark.cdc.relay import (  # noqa: F401

@@ -10,16 +10,15 @@ Reference parity: this replaces the reference's per-row UPDATE loop and
 in-memory key-set UPSERT
 (reference:src/etl_framework/plugins/loaders/sql_loader.py:286-324,431-474;
 file variant reference:src/etl_framework/plugins/loaders/file_loader.py:199-260)
-with two set-based strategies:
+with one set-based plan, ``resolve_lww_bucketed``: a single shuffle
+aligned with the table's buckets and a key-run window. The plan's skew
+handling follows what ``detect_skew`` measures in each batch, never a
+caller knob:
 
-- ``lww_dedupe`` — default: ``row_number`` window (one shuffle + one
-  column-comparator sort per partition). Benchmarked 2-3x faster than
-  the groupBy(keys).max(struct(...)) formulation because max-of-struct
-  has no mutable hash-agg buffer and Catalyst plans SortAggregate
-  (struct-comparator sorts on both partial and final stages).
-- optional **two-stage salted aggregation** for pathological per-key
-  fan-in: stage 1 aggregates on (keys, salt), stage 2 on keys, so no
-  single task owns a whole hot conversation (the window variant cannot
+- a hot CONVERSATION widens the within-bucket key salt of its own keys;
+- a hot FULL KEY is collapsed first by ``lww_dedupe``'s **two-stage
+  salted aggregation**: stage 1 aggregates on (keys, salt), stage 2 on
+  keys, so no single task owns the whole key (the window variant cannot
   give that guarantee). Benchmarked in BENCH/.
 """
 
@@ -90,16 +89,6 @@ def lww_dedupe(
             .agg(F.max(F.col(_W)).alias(_W))
             .select(*out_cols)
         )
-    return lww_dedupe_window(df, keys=keys, order_cols=order_cols)
-
-
-def lww_dedupe_window(
-    df: DataFrame,
-    keys: Sequence[str] = KEY_COLUMNS,
-    order_cols: Sequence[str] = ORDER_COLUMNS,
-) -> DataFrame:
-    """row_number()-based LWW (the production unsalted path; see
-    ``lww_dedupe`` for the measured rationale)."""
     rest = [c for c in df.columns if c not in keys and c not in order_cols]
     w = Window.partitionBy(*keys).orderBy(
         *[F.col(c).desc() for c in order_cols], *[F.col(c).desc_nulls_last() for c in rest]
@@ -144,35 +133,6 @@ def _union_as_events(
     return as_events.unionByName(src), payload_cols
 
 
-def _winners_to_stored(winners: DataFrame, keys: Sequence[str], payload_cols: list[str]) -> DataFrame:
-    """Project LWW winners to stored shape. Winning deletes persist as
-    TOMBSTONES (not physical drops): a later batch may still deliver an
-    *older* event for the key, and only the stored (ts, _lsn) lets it
-    no-op. Tombstones are filtered by ``LakeTable.current()`` and
-    garbage-collected via ``compact_tombstones``."""
-    return winners.select(
-        *keys,
-        *[F.when(F.col("op") != "D", F.col(c)).alias(c) for c in payload_cols],
-        "ts",
-        F.col("lsn").alias("_lsn"),
-        (F.col("op") == "D").alias("_deleted"),
-    )
-
-
-def resolve_lww(
-    target: DataFrame,
-    source: DataFrame,
-    keys: Sequence[str] = KEY_COLUMNS,
-) -> DataFrame:
-    """Merge resolver (reference formulation): union + per-key LWW winner
-    + tombstone projection. Output is stored shape. Set-based equivalent
-    of Iceberg ``MERGE ... WHEN MATCHED [AND src newer] UPDATE / WHEN
-    MATCHED AND op='D' DELETE / WHEN NOT MATCHED INSERT``."""
-    combined, payload_cols = _union_as_events(target, source, keys)
-    winners = lww_dedupe(combined, keys=keys)
-    return _winners_to_stored(winners, keys, payload_cols)
-
-
 def resolve_lww_bucketed(
     target: DataFrame,
     source: DataFrame,
@@ -180,8 +140,6 @@ def resolve_lww_bucketed(
     key_col: str,
     n_buckets: int,
     partitions: int | None = None,
-    strict_ties: bool = False,
-    key_salt: int | None = None,
     hot_first_keys: Sequence | None = None,
     hot_key_salt: int | None = None,
 ) -> DataFrame:
@@ -197,13 +155,8 @@ def resolve_lww_bucketed(
     by key, so the writer needs no further exchange or sort. Measured
     ~2x end-to-end on a 16M-event apply.
     """
-    from etl_framework_spark.lakehouse.table import bucket_expr
-
     combined, payload_cols = _union_as_events(target, source, keys)
-    rest = [
-        c for c in combined.columns if c not in keys and c not in ORDER_COLUMNS
-    ]
-    # _ksalt spreads a HOT BUCKET over ``key_salt`` tasks while keeping
+    # _ksalt spreads a HOT BUCKET over several tasks while keeping
     # every key's events in one task (salt is a pure function of the
     # key): a Zipf-hot conversation otherwise serializes its whole
     # bucket's sort into a single straggler (north-rule skew case).
@@ -212,9 +165,7 @@ def resolve_lww_bucketed(
     # those conversations' keys get the wide salt, so cold buckets keep
     # the default low salt (low salt = few files per bucket; a global
     # wide salt would fragment EVERY bucket's output ~10x).
-    if key_salt is None:
-        key_salt = max(4, (partitions or n_buckets * 4) // n_buckets)
-    salt_mod = F.lit(key_salt)
+    salt_mod = F.lit(max(4, (partitions or n_buckets * 4) // n_buckets))
     if hot_first_keys is not None and len(hot_first_keys) and hot_key_salt:
         salt_mod = F.when(
             F.col(key_col).isin(list(hot_first_keys)), F.lit(int(hot_key_salt))
@@ -224,15 +175,13 @@ def resolve_lww_bucketed(
         F.pmod(F.xxhash64(*[F.col(k) for k in keys]), salt_mod).cast("int"),
     )
     keyed = keyed.repartition(partitions or n_buckets * 4, "_bucket", "_ksalt")
-    # Payload columns join the sort ONLY under strict_ties: a (ts, lsn)
-    # tie means a byte-identical re-delivery (binlog contract), so the
-    # winner's content is the same either way — and sorting multi-KB
-    # text as a tiebreak measurably dominates the sort. strict_ties=True
-    # restores full determinism for logs that violate the contract.
+    # Payload columns stay out of the sort: a (ts, lsn) tie means a
+    # byte-identical re-delivery (binlog contract), so the winner's
+    # content is the same either way — and sorting multi-KB text as a
+    # tiebreak measurably dominates the sort.
     w = Window.partitionBy("_bucket", "_ksalt").orderBy(
         *[F.col(k).asc() for k in keys],
         *[F.col(c).desc() for c in ORDER_COLUMNS],
-        *([F.col(c).desc_nulls_last() for c in rest] if strict_ties else []),
     )
     # first row of each key run; eqNullSafe makes the partition head
     # (lag = NULL) and NULL-key comparisons well-defined
@@ -376,9 +325,7 @@ def apply_changes(
     changes: DataFrame,
     stream_id: str = "default",
     epoch_id: int | None = None,
-    salt_partitions: int | None = None,
     source_offsets: dict | None = None,
-    lineage: bool = True,
 ) -> int | None:
     """Apply one micro-batch of change events to the table.
 
@@ -387,18 +334,13 @@ def apply_changes(
     same atomic snapshot commit as the data, so a crash between write and
     commit re-applies cleanly and a crash after commit skips cleanly.
 
-    Skew (``salt_partitions``):
-
-    - ``None`` (default) — AUTO: a sampled key histogram
-      (``detect_hot_keys``) finds conversations hot enough to serialize
-      a resolver task. If any, ONLY their events are routed through the
-      salted two-stage pre-aggregation (split by a broadcast semi/anti
-      join — no shuffle) and the collapsed winners rejoin the cold
-      events in the standard single-shuffle bucketed resolver; the cold
-      99%+ keeps the fast plan. No hot keys -> pure fast path.
-    - ``0`` — never salt (the r1/r2 fast path, skew-exposed).
-    - ``> 0`` — force the global salted aggregation path for the whole
-      batch (the original caller-knob behavior).
+    Skew: a sampled key histogram (``detect_skew``) finds keys hot
+    enough to serialize a resolver task. Hot full keys alone are routed
+    through the salted two-stage pre-aggregation (split by a broadcast
+    semi/anti join — no shuffle) and their collapsed winners rejoin the
+    cold events in the single-shuffle bucketed resolver; hot
+    conversations get a wider key salt inside that resolver. The cold
+    99%+ keeps the fast plan; no hot keys -> pure fast path.
     """
     if epoch_id is not None and epoch_id <= table.last_epoch(stream_id):
         return None
@@ -408,12 +350,37 @@ def apply_changes(
         changes.sparkSession.conf.get("spark.sql.shuffle.partitions", "200")
     )
     partitions = max(n_part, table.n_buckets)
-    n_hot = 0
-    auto_salt = 0
-    hot_convs: list = []
-    hot_key_salt: int | None = None
+    skew = detect_skew(
+        changes,
+        keys,
+        partitions,
+        base_key_salt=max(4, partitions // max(table.n_buckets, 1)),
+    )
+    hot_convs = skew["hot_convs"]
+    hot_key_salt = skew["key_salt"]
+    auto_salt = skew["salt"] or (hot_key_salt or 0)
+    n_hot = len(skew["hot_keys"])
+    if n_hot:
+        # Hot FULL keys (one (conv, turn) updated ~a task's worth of
+        # times): un-splittable by the window, so collapse ONLY them
+        # in a partial-agg-friendly salted two-stage aggregation
+        # (split off by a broadcast semi/anti join — no shuffle) and
+        # let the winners ride the fast resolver with the cold 99%.
+        spark = changes.sparkSession
+        hot_df = spark.createDataFrame(
+            [tuple(r[k] for k in keys) for r in skew["hot_keys"]],
+            changes.select(*keys).schema,
+        )
+        hot_events = changes.join(F.broadcast(hot_df), on=list(keys), how="left_semi")
+        cold_events = changes.join(F.broadcast(hot_df), on=list(keys), how="left_anti")
+        hot_winners = lww_dedupe(hot_events, keys=keys, salt_partitions=skew["salt"])
+        deduped = cold_events.unionByName(hot_winners.select(*cold_events.columns))
+    else:
+        # Hot CONVERSATION only (many turns): handled inside the
+        # bucketed resolver by the widened key_salt set above.
+        deduped = changes
 
-    def bucketed_resolver(tgt, src):
+    def resolver(tgt, src):
         return resolve_lww_bucketed(
             tgt,
             src,
@@ -425,87 +392,45 @@ def apply_changes(
             hot_key_salt=hot_key_salt,
         )
 
-    if salt_partitions is not None and salt_partitions > 0:
-        # Forced global skew path: salted two-stage aggregation collapses
-        # hot keys before the resolve; then the standard resolver runs on
-        # the (small) winner set.
-        deduped = lww_dedupe(changes, salt_partitions=salt_partitions)
-        resolver = lambda tgt, src: resolve_lww(tgt, src, keys=keys)  # noqa: E731
-    elif salt_partitions is None:
-        skew = detect_skew(
-            changes,
-            keys,
-            partitions,
-            base_key_salt=max(4, partitions // max(table.n_buckets, 1)),
-        )
-        hot_convs = skew["hot_convs"]
-        hot_key_salt = skew["key_salt"]
-        auto_salt = skew["salt"] or (hot_key_salt or 0)
-        n_hot = len(skew["hot_keys"])
-        if n_hot:
-            # Hot FULL keys (one (conv, turn) updated ~a task's worth of
-            # times): un-splittable by the window, so collapse ONLY them
-            # in a partial-agg-friendly salted two-stage aggregation
-            # (split off by a broadcast semi/anti join — no shuffle) and
-            # let the winners ride the fast resolver with the cold 99%.
-            spark = changes.sparkSession
-            hot_df = spark.createDataFrame(
-                [tuple(r[k] for k in keys) for r in skew["hot_keys"]],
-                changes.select(*keys).schema,
-            )
-            hot_events = changes.join(F.broadcast(hot_df), on=list(keys), how="left_semi")
-            cold_events = changes.join(F.broadcast(hot_df), on=list(keys), how="left_anti")
-            hot_winners = lww_dedupe(hot_events, keys=keys, salt_partitions=skew["salt"])
-            deduped = cold_events.unionByName(hot_winners.select(*cold_events.columns))
-        else:
-            # Hot CONVERSATION only (many turns): handled inside the
-            # bucketed resolver by the widened key_salt set above.
-            deduped = changes
-        resolver = bucketed_resolver
-    else:
-        # salt_partitions == 0: skew handling explicitly disabled.
-        deduped = changes
-        resolver = bucketed_resolver
     summary: dict = {"stream_id": stream_id}
     if source_offsets:
         summary["source_offsets"] = source_offsets
-    if lineage:
-        # Run the lineage aggregation CONCURRENTLY with the merge's own
-        # jobs (independent reads of the same immutable batch; Spark
-        # schedules jobs from separate threads in parallel). Its result
-        # is only needed at commit time, so nothing blocks on it here.
-        # Daemon thread: if the merge raises before commit, the orphaned
-        # (small) lineage job can't keep the process alive.
-        import threading
+    # Run the lineage aggregation CONCURRENTLY with the merge's own
+    # jobs (independent reads of the same immutable batch; Spark
+    # schedules jobs from separate threads in parallel). Its result
+    # is only needed at commit time, so nothing blocks on it here.
+    # Daemon thread: if the merge raises before commit, the orphaned
+    # (small) lineage job can't keep the process alive.
+    import threading
 
-        key = table.key_columns[0]
-        key_type = table.schema[key].dataType if key in {
-            f.name for f in table.schema.fields
-        } else None
-        _res: dict = {}
-        _done = threading.Event()
+    key = table.key_columns[0]
+    key_type = table.schema[key].dataType if key in {
+        f.name for f in table.schema.fields
+    } else None
+    _res: dict = {}
+    _done = threading.Event()
 
-        def _lineage_job():
-            try:
-                _res["v"] = compute_lineage(
-                    changes, key, table.n_buckets, key_type=key_type
-                )
-            except Exception as e:  # surfaced at commit time
-                _res["e"] = e
-            finally:
-                _done.set()
+    def _lineage_job():
+        try:
+            _res["v"] = compute_lineage(
+                changes, key, table.n_buckets, key_type=key_type
+            )
+        except Exception as e:  # surfaced at commit time
+            _res["e"] = e
+        finally:
+            _done.set()
 
-        threading.Thread(target=_lineage_job, daemon=True).start()
+    threading.Thread(target=_lineage_job, daemon=True).start()
 
-        def _lineage_result():
-            _done.wait()
-            if "e" in _res:
-                raise _res["e"]
-            return _res["v"]
+    def _lineage_result():
+        _done.wait()
+        if "e" in _res:
+            raise _res["e"]
+        return _res["v"]
 
-        # zero-arg callable: _commit resolves it right before the
-        # snapshot is written, after the merge's heavy jobs finished
-        summary["lineage"] = _lineage_result
+    # zero-arg callable: _commit resolves it right before the
+    # snapshot is written, after the merge's heavy jobs finished
+    summary["lineage"] = _lineage_result
     # Per-commit metrics ride in the snapshot summary next to lineage
     # (north rule: per-partition lineage + metrics). The wall clock is
     # resolved lazily at commit time so it covers the whole apply.
@@ -514,7 +439,7 @@ def apply_changes(
     _t0 = _time.perf_counter()
     summary["metrics"] = lambda: {
         "apply_seconds": round(_time.perf_counter() - _t0, 3),
-        "salt_partitions": salt_partitions if salt_partitions is not None else auto_salt,
+        "salt_partitions": auto_salt,
         "hot_keys_detected": n_hot,
         "hot_conversations": len(hot_convs),
     }

@@ -61,6 +61,7 @@ mirrors Delta/Iceberg CDF-consumer patterns (``table_changes`` →
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import DataFrame
@@ -79,6 +80,13 @@ __all__ = [
     "sync_once",
     "sync_table",
 ]
+
+log = logging.getLogger(__name__)
+
+#: ``sync_table`` gives up after this many ``sync_once`` rounds, so a
+#: source that commits faster than the relay applies surfaces as an
+#: error instead of an unbounded loop
+MAX_SYNC_ROUNDS = 100
 
 
 class RelayGapError(RuntimeError):
@@ -175,12 +183,7 @@ def _bootstrap_feed(src) -> DataFrame:
     return cur.withColumn("_change_type", F.lit("I"))
 
 
-def sync_once(
-    src,
-    dst,
-    stream_id: str | None = None,
-    max_retries: int = 5,
-) -> int | None:
+def sync_once(src, dst, stream_id: str | None = None) -> int | None:
     """Replicate every source commit since the last sync into ``dst``.
 
     Returns the target's new version, or ``None`` if the target is
@@ -220,34 +223,25 @@ def sync_once(
         # merge and both resolver branches then reuse it
         feed.count()
         return commit_with_retry(
-            dst,
-            lambda t: _apply_feed(t, feed, v_from, v_to, stream_id),
-            max_retries=max_retries,
+            dst, lambda t: _apply_feed(t, feed, v_from, v_to, stream_id)
         )
     finally:
         feed.unpersist()
 
 
-def sync_table(
-    src,
-    dst,
-    stream_id: str | None = None,
-    max_retries: int = 5,
-    max_rounds: int = 100,
-) -> int | None:
+def sync_table(src, dst, stream_id: str | None = None) -> int | None:
     """Drive ``sync_once`` until the target is caught up with the
     source (the source may keep committing while a sync runs). Returns
     the last committed target version, or ``None`` if already caught
-    up. Bounded by ``max_rounds`` so a faster-than-sync source surfaces
-    as an error instead of an unbounded loop."""
+    up. Bounded by ``MAX_SYNC_ROUNDS``."""
     result = None
-    for _ in range(max_rounds):
-        v = sync_once(src, dst, stream_id=stream_id, max_retries=max_retries)
+    for _ in range(MAX_SYNC_ROUNDS):
+        v = sync_once(src, dst, stream_id=stream_id)
         if v is None:
             return result
         result = v
     raise RuntimeError(
-        f"relay not caught up after {max_rounds} rounds — source is "
+        f"relay not caught up after {MAX_SYNC_ROUNDS} rounds — source is "
         "committing faster than the relay applies"
     )
 
@@ -324,7 +318,6 @@ def start_relay(
     dst,
     stream_id: str | None = None,
     poll_interval_s: float = 0.5,
-    max_retries: int = 5,
     maintenance_max_files: int = 0,
     on_sync=None,
 ) -> RelayDaemon:
@@ -343,9 +336,7 @@ def start_relay(
     optimistic commits) — the caller's handles are never touched, so
     they stay safe to use on the calling thread.
     """
-    import sys
     import threading
-    import time
 
     stream_id = stream_id or _default_stream_id(src)
     stop = threading.Event()
@@ -358,9 +349,7 @@ def start_relay(
     def loop():
         try:
             while not stop.is_set():
-                v = sync_once(
-                    src, dst, stream_id=stream_id, max_retries=max_retries
-                )
+                v = sync_once(src, dst, stream_id=stream_id)
                 if v is None:
                     # caught up — idle until the next poll tick
                     stop.wait(poll_interval_s)
@@ -377,10 +366,7 @@ def start_relay(
                         if st["max_files_per_bucket"] >= maintenance_max_files:
                             dst.compact(min_files=maintenance_max_files)
                     except Exception as e:
-                        print(
-                            f"[relay] maintenance skipped: {e!r}",
-                            file=sys.stderr,
-                        )
+                        log.warning("relay maintenance skipped: %r", e, exc_info=True)
                 if on_sync is not None:
                     on_sync(v)
         except BaseException as e:  # surfaced via .error / wait_caught_up

@@ -219,12 +219,11 @@ class DirTable(BucketTable):
         key_columns: list[str],
         n_buckets: int = 16,
         merge_policy: str | None = None,
-        order_columns: list[str] | None = None,
     ) -> "DirTable":
         log = os.path.join(path, LOG_DIR)
         if os.path.exists(os.path.join(log, "_table.json")):
             raise FileExistsError(f"table already exists: {path}")
-        order_columns = fold_order(merge_policy, order_columns)
+        order_columns = fold_order(merge_policy)
         os.makedirs(log, exist_ok=True)
         os.makedirs(os.path.join(path, DATA_DIR), exist_ok=True)
         with open(os.path.join(log, "_table.json"), "w") as f:

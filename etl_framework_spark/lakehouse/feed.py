@@ -65,10 +65,11 @@ def delta_fast_path(old_map: dict, new_map: dict, read_files):
     return read_files(added), added
 
 
-#: delta intervals larger than this skip the driver-side key extraction
-#: (the semi-join scope); the single-pass diff still runs, it just
+#: delta intervals with more rows than this (by the files' parquet
+#: footers) skip the driver-side key extraction and the broadcast
+#: semi-join scope it feeds; the single-pass diff still runs, it just
 #: shuffles the old bucket state instead of O(delta) rows.
-LOCAL_KEYS_MAX_BYTES = 256 << 20
+LOCAL_KEYS_MAX_ROWS = 1_000_000
 
 
 def _local_delta_keys(table, entries: list[dict], key_columns: list[str]):
@@ -77,20 +78,20 @@ def _local_delta_keys(table, entries: list[dict], key_columns: list[str]):
     O(delta) bytes, zero Spark jobs — a Spark-side distinct would
     re-scan the delta subtree once per use and pay a stage per job.
     Returns a pandas frame, or None (caller degrades gracefully) when
-    the interval exceeds ``LOCAL_KEYS_MAX_BYTES`` or any file resists
-    a column-projected read."""
+    the footers count more than ``LOCAL_KEYS_MAX_ROWS`` rows or any file
+    resists a column-projected read."""
     import os
+    from concurrent.futures import ThreadPoolExecutor
 
     paths = [os.path.join(table.path, e["path"]) for e in entries]
     try:
-        if sum(os.path.getsize(p) for p in paths) > LOCAL_KEYS_MAX_BYTES:
-            return None
-        from concurrent.futures import ThreadPoolExecutor
-
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         with ThreadPoolExecutor(max_workers=min(16, len(paths))) as ex:
+            footers = list(ex.map(pq.read_metadata, paths))
+            if sum(m.num_rows for m in footers) > LOCAL_KEYS_MAX_ROWS:
+                return None
             parts = list(
                 ex.map(lambda p: pq.read_table(p, columns=key_columns), paths)
             )
@@ -183,10 +184,12 @@ def diff_versions(
                     F.broadcast(scope), on=keys, how="left_semi"
                 )
             except Exception:
-                # pandas->Spark conversion or broadcast build can fail
-                # on adversarial key data (nulls, overflow) — the diff
-                # below is correct without the semi-join, it just
-                # shuffles the old bucket state instead of O(delta)
+                # catches only driver-side planning: the pandas->Spark
+                # conversion can fail on adversarial key data (nulls,
+                # overflow). The broadcast itself is built at action
+                # time, outside this guard — LOCAL_KEYS_MAX_ROWS bounds
+                # it up front. The diff below is correct without the
+                # semi-join, it just shuffles the old bucket state.
                 pass
         target = delta_rows.drop("_seq").schema
         base = align_to_schema(old_all, target).withColumn("_seq", F.lit(0))

@@ -186,7 +186,6 @@ class IcebergTable:
         key_columns: list[str],
         n_buckets: int = 32,
         merge_policy: str | None = None,
-        order_columns: list[str] | None = None,
     ) -> "IcebergTable":
         if merge_policy is not None:
             raise ValueError(
@@ -538,19 +537,11 @@ class IcebergTable:
     def _catalog(self) -> str:
         return self.identifier.split(".", 1)[0]
 
-    def compact(self, buckets=None, min_files: int = 2, summary=None) -> int:
-        where = ""
-        if buckets is not None:
-            ids = ",".join(str(int(b)) for b in buckets)
-            where = (
-                f", where => 'system.bucket({self.n_buckets}, "
-                f"`{self.key_columns[0]}`) IN ({ids})'"
-            )
+    def compact(self, min_files: int = 2) -> int:
         self.spark.sql(
             f"CALL {self._catalog()}.system.rewrite_data_files("
             f"table => '{self.identifier}'"
-            f", options => map('min-input-files', '{int(min_files)}')"
-            f"{where})"
+            f", options => map('min-input-files', '{int(min_files)}'))"
         )
         self.refresh()
         return self.version
@@ -592,7 +583,7 @@ class IcebergTable:
             "delta_buckets": 0,
         }
 
-    def rebucket(self, n_buckets: int, summary=None) -> int:
+    def rebucket(self, n_buckets: int) -> int:
         """Iceberg evolves the partition SPEC in metadata only — new
         writes use the new width, old files keep theirs (no rewrite
         needed; run ``compact`` to converge the layout)."""

@@ -122,7 +122,7 @@ class KeyedTable(Protocol):
         ...
 
     # ------------------------------------------------------- maintenance
-    def compact(self, buckets: list[int] | None = None, min_files: int = 2, summary: dict | None = None) -> int: ...
+    def compact(self, min_files: int = 2) -> int: ...
 
     def expire_snapshots(self, keep_last: int = 10, grace_seconds: int = 3600) -> dict[str, int]: ...
 
@@ -131,7 +131,7 @@ class KeyedTable(Protocol):
         stats-driven maintenance trigger signal."""
         ...
 
-    def rebucket(self, n_buckets: int, summary: dict | None = None) -> int:
+    def rebucket(self, n_buckets: int) -> int:
         """Offline whole-table re-key to a new bucket count
         (version-preconditioned; epochs carry forward)."""
         ...

@@ -148,17 +148,15 @@ def commit_with_retry(
 MERGE_POLICIES = (None, "lww", "replace")
 
 
-def fold_order(merge_policy: str | None, order_columns: list[str] | None) -> list[str]:
+def fold_order(merge_policy: str | None) -> list[str]:
     """Validate a create-time ``merge_policy``; returns the table's
-    ``order_columns`` ("lww" defaults to the CDC stored shape's
-    ``["ts", "_lsn"]``)."""
+    ``order_columns``: the CDC stored shape's ``["ts", "_lsn"]`` for
+    "lww", none otherwise."""
     if merge_policy not in MERGE_POLICIES:
         raise ValueError(
             f"merge_policy must be one of {MERGE_POLICIES}, got {merge_policy!r}"
         )
-    if merge_policy == "lww" and order_columns is None:
-        return ["ts", "_lsn"]
-    return list(order_columns or [])
+    return ["ts", "_lsn"] if merge_policy == "lww" else []
 
 
 def _encode_stat(v):
@@ -1152,12 +1150,7 @@ class BucketTable:
         )
 
     # -------------------------------------------------------- maintenance
-    def compact(
-        self,
-        buckets: list[int] | None = None,
-        min_files: int = 2,
-        summary: dict[str, Any] | None = None,
-    ) -> int:
+    def compact(self, min_files: int = 2) -> int:
         """Rewrite fragmented buckets into one sorted file set each.
 
         APPEND-heavy usage accumulates files per bucket (every append
@@ -1171,8 +1164,7 @@ class BucketTable:
         publishes nothing and returns the current version.
         """
         view = self._view()
-        bmap = view.buckets if buckets is None else view.buckets_for(buckets)
-        frag = sorted(int(b) for b, fs in bmap.items() if len(fs) >= min_files)
+        frag = sorted(int(b) for b, fs in view.buckets.items() if len(fs) >= min_files)
         if not frag:
             return view.version
         ref, schema = self._ensure_schema(view.schema)
@@ -1193,10 +1185,10 @@ class BucketTable:
                 on_conflict="keep_fresh",
             ),
             ref,
-            {"operation": "compact", "buckets": frag, **(summary or {})},
+            {"operation": "compact", "buckets": frag},
         )
 
-    def rebucket(self, n_buckets: int, summary: dict[str, Any] | None = None) -> int:
+    def rebucket(self, n_buckets: int) -> int:
         """Offline maintenance: rewrite the WHOLE table under a new
         bucket count (a table sized for 1 TB keeps its create-time
         width forever otherwise — at 100 TB each bucket becomes a
@@ -1215,11 +1207,7 @@ class BucketTable:
         v = self._commit(
             BucketDelta("overwrite", new_buckets),
             ref,
-            {
-                "operation": "rebucket",
-                "from_buckets": self.n_buckets,
-                **(summary or {}),
-            },
+            {"operation": "rebucket", "from_buckets": self.n_buckets},
             expect_version=pre,
             n_buckets=n_buckets,
         )
@@ -1328,12 +1316,11 @@ class LakeTable(BucketTable):
         schema: T.StructType,
         key_columns: list[str],
         n_buckets: int = 32,
-        if_exists: str = "error",
         manifest_shard_size: int | None = None,
         merge_policy: str | None = None,
-        order_columns: list[str] | None = None,
     ) -> "LakeTable":
-        """Create an empty table. ``if_exists``: error | ignore | replace.
+        """Create an empty table; raises ``FileExistsError`` if one
+        already exists at ``path``.
 
         ``manifest_shard_size``: buckets per manifest shard; 0 = inline
         bucket map. Default: inline up to ``MANIFEST_INLINE_MAX``
@@ -1341,26 +1328,17 @@ class LakeTable(BucketTable):
 
         ``merge_policy`` (see ``MERGE_POLICIES``): ``None`` keeps every
         MERGE copy-on-write; ``"lww"``/``"replace"`` let MERGE commit
-        delta files folded at read (merge-on-read). ``order_columns``
-        is the event-time total order used by the ``"lww"`` fold
-        (default ``["ts", "_lsn"]`` — the CDC stored shape)."""
+        delta files folded at read (merge-on-read)."""
         meta = os.path.join(os.path.abspath(path), META_DIR)
         if os.path.exists(os.path.join(meta, "table.json")):
-            if if_exists == "error":
-                raise FileExistsError(f"LakeTable already exists at {path}")
-            if if_exists == "ignore":
-                return cls(spark, path)
-            if if_exists == "replace":
-                import shutil
-
-                shutil.rmtree(path)
+            raise FileExistsError(f"LakeTable already exists at {path}")
         if manifest_shard_size is None:
             manifest_shard_size = (
                 0
                 if n_buckets <= MANIFEST_INLINE_MAX
                 else -(-n_buckets // MANIFEST_TARGET_SHARDS)
             )
-        order_columns = fold_order(merge_policy, order_columns)
+        order_columns = fold_order(merge_policy)
         os.makedirs(meta, exist_ok=True)
         os.makedirs(os.path.join(meta, SHARD_DIR), exist_ok=True)
         os.makedirs(os.path.join(os.path.abspath(path), DATA_DIR), exist_ok=True)

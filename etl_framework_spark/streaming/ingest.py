@@ -23,6 +23,7 @@ deterministically (SURVEY.md §2.10).
 
 from __future__ import annotations
 
+import logging
 from typing import Callable
 
 from pyspark.sql import SparkSession
@@ -31,6 +32,8 @@ from pyspark.sql.streaming import StreamingQuery
 
 from etl_framework_spark.cdc.apply import apply_changes
 from etl_framework_spark.lakehouse.table import LakeTable
+
+log = logging.getLogger(__name__)
 
 
 def start_ingest(
@@ -43,7 +46,6 @@ def start_ingest(
     max_files_per_trigger: int = 2,
     available_now: bool = True,
     processing_time: str = "5 seconds",
-    salt_partitions: int | None = None,
     on_batch: Callable[[int], None] | None = None,
     maintenance_every: int = 0,
     compact_min_files: int = 4,
@@ -51,7 +53,6 @@ def start_ingest(
     expire_grace_seconds: int = 3600,
     table_factory: Callable[[SparkSession, str], "LakeTable"] | None = None,
     maintenance_max_files: int = 0,
-    maintenance_check_every: int = 1,
 ) -> StreamingQuery:
     """Tail ``change_dir`` (recursive parquet file source) into the
     LakeTable at ``table_path``.
@@ -61,8 +62,8 @@ def start_ingest(
     continuous ``processing_time`` trigger. ``on_batch`` is a test hook
     called after each successful apply (e.g. to simulate a crash).
 
-    Maintenance (best-effort between batches; failures are logged to
-    stderr and never fail the stream — the chaos soak covers the
+    Maintenance (best-effort between batches; failures are logged as
+    warnings and never fail the stream — the chaos soak covers the
     concurrent case):
 
     - ``maintenance_every=N`` (0 = off): every N applied epochs run
@@ -70,9 +71,9 @@ def start_ingest(
       next to any writer) and ``expire_snapshots`` (bounds the version
       directory, which otherwise grows one file per epoch forever).
     - ``maintenance_max_files=M`` (0 = off): STATS-DRIVEN compaction —
-      every ``maintenance_check_every`` epochs consult
-      ``table.file_stats()`` (metadata only) and compact ONLY when some
-      bucket holds >= M files, passing ``min_files=M`` so exactly the
+      every epoch consults ``table.file_stats()`` (metadata only) and
+      compacts ONLY when some bucket holds >= M files, passing
+      ``min_files=M`` so exactly the
       hot buckets rewrite and cold buckets aren't churned. This is the
       right trigger for merge-on-read tables, where delta files
       accumulate at the per-bucket rate the keys actually hash to, not
@@ -99,16 +100,10 @@ def start_ingest(
             batch_df,
             stream_id=stream_id,
             epoch_id=int(epoch_id),
-            salt_partitions=salt_partitions,
             source_offsets={"epoch": int(epoch_id)},
         )
-        import sys as _sys
-
         stats_mode = maintenance_max_files > 0
-        if (
-            stats_mode
-            and int(epoch_id) % max(maintenance_check_every, 1) == 0
-        ):
+        if stats_mode:
             try:
                 st = table.refresh().file_stats()
                 if st["max_files_per_bucket"] >= maintenance_max_files:
@@ -116,7 +111,7 @@ def start_ingest(
                     # buckets rewrite; cold buckets carry by reference
                     table.compact(min_files=maintenance_max_files)
             except Exception as e:  # best-effort; the stream must not die
-                print(f"[ingest] stats maintenance skipped: {e!r}", file=_sys.stderr)
+                log.warning("stats maintenance skipped: %r", e, exc_info=True)
         if maintenance_every > 0 and int(epoch_id) > 0 and int(epoch_id) % maintenance_every == 0:
             try:
                 if not stats_mode:
@@ -126,7 +121,7 @@ def start_ingest(
                     grace_seconds=expire_grace_seconds,
                 )
             except Exception as e:  # best-effort; the stream must not die
-                print(f"[ingest] maintenance skipped: {e!r}", file=_sys.stderr)
+                log.warning("maintenance skipped: %r", e, exc_info=True)
         if on_batch is not None:
             on_batch(int(epoch_id))
 

@@ -4,12 +4,14 @@ carries ~30% of all events), unsalted vs auto-salted.
 The north rule demands salted repartitioning for hot-conversation skew.
 The bucketed resolver buckets on conv_id, so a hot conversation funnels
 into ONE bucket; with the static default key salt that bucket's sort
-serializes into a few straggler tasks. ``apply_changes``'s AUTO mode
+serializes into a few straggler tasks. ``apply_changes``'s skew probe
 (``detect_skew``) sizes the within-bucket key salt from a sampled key
 histogram instead. This script measures both configurations on the same
 log — wall seconds AND the task-time distribution of the heaviest stage
 (via the Spark UI REST API): the unsalted run shows a long tail
-(max >> p50), the auto run flattens it.
+(max >> p50), the auto run flattens it. The unsalted arm stubs
+``detect_skew`` inside its job to report no skew, so both arms run the
+same ``apply_changes`` call.
 
 Writes BENCH/skew.json. Usage: python scripts/bench_skew.py [n_events]
 """
@@ -36,6 +38,10 @@ import pyspark.sql.types as T
 import shutil as _sh
 
 salt = {salt!r}
+if salt == 0:
+    import etl_framework_spark.cdc.apply as _apply
+    _apply.detect_skew = lambda *a, **k: {{
+        "hot_keys": [], "hot_convs": [], "salt": 0, "key_salt": None}}
 # the UI is off by default (session.py); this study reads task-time
 # distributions from its REST API, so enable it for the run
 spark = get_spark(app_name="skew", master="local[{cpus}]",
@@ -81,8 +87,7 @@ def stage_stats(min_stage_id):
 _sh.rmtree(table_path, ignore_errors=True)
 w = LakeTable.create(spark, table_path + "_w", schema=schema,
                      key_columns=KEY_COLUMNS, n_buckets={buckets})
-apply_changes(w, changes.limit(max(n // 10, 1)), stream_id="w", epoch_id=0,
-              salt_partitions=salt)
+apply_changes(w, changes.limit(max(n // 10, 1)), stream_id="w", epoch_id=0)
 _sh.rmtree(table_path + "_w", ignore_errors=True)
 
 times, stats, metrics = [], {{}}, {{}}
@@ -92,8 +97,7 @@ for trial in range({trials}):
                              key_columns=KEY_COLUMNS, n_buckets={buckets})
     before = max((s["stageId"] for s in rest("/stages")), default=-1) + 1
     t0 = time.perf_counter()
-    apply_changes(table, changes, stream_id="skew", epoch_id=0,
-                  salt_partitions=salt)
+    apply_changes(table, changes, stream_id="skew", epoch_id=0)
     dt = time.perf_counter() - t0
     if not times or dt < min(times):
         stats = stage_stats(before)

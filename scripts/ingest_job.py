@@ -31,10 +31,6 @@ def main() -> int:
     ap.add_argument("--stream-id", default="cdc")
     ap.add_argument("--create", action="store_true", help="create table if missing")
     ap.add_argument("--n-buckets", type=int, default=64)
-    ap.add_argument("--salt-partitions", type=int, default=None,
-                    help="default: AUTO skew detection (sampled histogram); "
-                         "0 disables skew handling; >0 forces the global "
-                         "salted-aggregation path")
     ap.add_argument("--maintenance-every", type=int, default=0,
                     help="run compact + expire_snapshots every N epochs (0=off)")
     ap.add_argument("--continuous", action="store_true",
@@ -71,7 +67,6 @@ def main() -> int:
         max_files_per_trigger=args.max_files_per_trigger,
         available_now=not args.continuous,
         processing_time=args.trigger,
-        salt_partitions=args.salt_partitions,
         maintenance_every=args.maintenance_every,
     )
     q.awaitTermination()

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from etl_framework_spark.cdc import apply_changes, lww_dedupe, lww_dedupe_window
+from etl_framework_spark.cdc import apply_changes, lww_dedupe
 from etl_framework_spark.datagen import gen_changes
 from etl_framework_spark.lakehouse import LakeTable
 from etl_framework_spark.schemas import KEY_COLUMNS, TRANSCRIPT_SCHEMA
@@ -23,13 +23,14 @@ STORED_SCHEMA = T.StructType(
 )
 
 
-def make_table(spark, tmp_path, n_buckets=8) -> LakeTable:
+def make_table(spark, tmp_path, n_buckets=8, merge_policy=None) -> LakeTable:
     return LakeTable.create(
         spark,
         str(tmp_path / "transcripts"),
         STORED_SCHEMA,
         key_columns=KEY_COLUMNS,
         n_buckets=n_buckets,
+        merge_policy=merge_policy,
     )
 
 
@@ -52,15 +53,6 @@ def assert_state_equals_oracle(table: LakeTable, all_changes_pdf: pd.DataFrame):
         )
     # per-turn text equality under stable (conv_id, turn_idx) ordering is
     # the BASELINE invariant — asserted above via the text column.
-
-
-def test_lww_dedupe_agg_equals_window(spark):
-    changes = gen_changes(spark, 5000, n_convs=50, seed=7)
-    a = lww_dedupe(changes).orderBy("conv_id", "turn_idx").toPandas()
-    w = lww_dedupe_window(changes).orderBy("conv_id", "turn_idx").toPandas()
-    a = a[sorted(a.columns)].reset_index(drop=True)
-    w = w[sorted(w.columns)].reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, w)
 
 
 def test_lww_dedupe_salted_equals_plain(spark):
@@ -161,14 +153,14 @@ def test_delete_removes_row(spark, tmp_path):
     assert {(r.conv_id, r.text) for r in rows} == {("c2", "world")}
 
 
-@pytest.mark.parametrize("salt", [0, 8, None])
-def test_skewed_log_matches_oracle(spark, tmp_path, salt):
-    """80% of events on one hot conversation; unsalted, force-salted and
-    AUTO (sampled hot-key detection + targeted salting) paths all agree
-    with the oracle."""
-    table = make_table(spark, tmp_path)
+@pytest.mark.parametrize("merge_policy", [None, "lww"])
+def test_skewed_log_matches_oracle(spark, tmp_path, merge_policy):
+    """80% of events on one hot conversation; the skew-probed apply
+    (sampled hot-key detection + targeted salting) agrees with the
+    oracle on a copy-on-write and a merge-on-read table."""
+    table = make_table(spark, tmp_path, merge_policy=merge_policy)
     changes = gen_changes(spark, 8000, n_convs=50, hot_frac=0.8, n_hot=1, seed=33)
-    apply_changes(table, changes, salt_partitions=salt)
+    apply_changes(table, changes)
     assert_state_equals_oracle(table, changes.toPandas())
 
 

@@ -841,6 +841,18 @@ def test_changes_between_delta_fast_path_matches_full_diff(
     assert fast_rows[(str(del_key.conv_id), int(del_key.turn_idx))][0] == "D"
     assert (str(late_key.conv_id), int(late_key.turn_idx)) not in fast_rows
 
+    # above LOCAL_KEYS_MAX_ROWS the fast path skips the broadcast key
+    # scope; the feed stays exact, only unscoped
+    plan = lambda df: df._jdf.queryExecution().optimizedPlan().toString()
+    assert "LeftSemi" in plan(fast)
+    monkeypatch.setattr(feed, "delta_interval_suffix", spy)
+    monkeypatch.setattr(feed, "LOCAL_KEYS_MAX_ROWS", 0)
+    taken.clear()
+    unscoped = t.changes_between(v_base, v_head)
+    assert taken["added"], "the row bound must not disable the fast path"
+    assert "LeftSemi" not in plan(unscoped)
+    assert full(unscoped) == fast_full
+
     # an interval containing a compact falls back to the full diff
     monkeypatch.setattr(feed, "delta_interval_suffix", spy)
     t.compact(min_files=1)

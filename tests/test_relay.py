@@ -397,6 +397,44 @@ def test_relay_daemon_tails_and_resumes(spark, tmp_path):
     assert dst.refresh().file_stats()["max_files_per_bucket"] <= 4
 
 
+def test_relay_daemon_logs_failed_maintenance_and_keeps_syncing(
+    spark, tmp_path, caplog, monkeypatch
+):
+    """A replica compaction that raises is logged as a warning by the
+    relay's logger, and the daemon keeps replicating."""
+    import logging
+
+    from etl_framework_spark.cdc import start_relay
+
+    def broken_compact(self, min_files=2):
+        raise OSError("replica volume is read-only")
+
+    monkeypatch.setattr(DirTable, "compact", broken_compact)
+    caplog.set_level(logging.WARNING, logger="etl_framework_spark.cdc.relay")
+    src = _mk(LakeTable, spark, str(tmp_path / "src"))
+    dst = _mk(DirTable, spark, str(tmp_path / "dst"), n_buckets=4)
+    full = gen_changes(spark, 2000, seed=47)
+    apply_changes(src, full.where(F.col("lsn") <= 1000), stream_id="s", epoch_id=0)
+
+    daemon = start_relay(src, dst, poll_interval_s=0.1, maintenance_max_files=1)
+    try:
+        daemon.wait_caught_up(src, dst, timeout_s=120)
+        apply_changes(src, full.where(F.col("lsn") > 1000), stream_id="s", epoch_id=1)
+        daemon.wait_caught_up(src, dst, timeout_s=120)
+    finally:
+        daemon.stop()
+    assert daemon.error is None
+    assert daemon.synced_rounds == 2
+    assert _state(dst) == _state(src)
+    warnings = [
+        r.getMessage()
+        for r in caplog.records
+        if r.name == "etl_framework_spark.cdc.relay" and r.levelno == logging.WARNING
+    ]
+    assert len(warnings) == 2
+    assert all("replica volume is read-only" in m for m in warnings)
+
+
 @pytest.mark.slow
 def test_relay_daemon_soak_concurrent_ingest(spark, tmp_path):
     """Round-5 soak: a live streaming ingest commits into the source

@@ -10,6 +10,7 @@ change" — is executable, not aspirational.
 
 from __future__ import annotations
 
+import inspect
 import threading
 
 import pandas as pd
@@ -26,6 +27,7 @@ from etl_framework_spark.lakehouse import (
     LakeTable,
     commit_with_retry,
 )
+from etl_framework_spark.lakehouse.iceberg import IcebergTable
 from etl_framework_spark.schemas import (
     CHANGE_SCHEMA,
     KEY_COLUMNS,
@@ -65,6 +67,27 @@ def _df(spark, rows):
 def test_satisfies_protocol(spark, tmp_path, impl):
     t = impl.create(spark, str(tmp_path / "t"), SIMPLE, ["id"], n_buckets=4)
     assert isinstance(t, KeyedTable)
+
+
+def test_formats_share_protocol_signatures():
+    """Every format declares the protocol's parameter names, so an
+    option cannot drift back into one format alone."""
+    for name in (
+        "read", "current", "touched_buckets", "changes_between", "file_stats",
+        "append", "overwrite", "merge", "compact", "rebucket", "expire_snapshots",
+    ):
+        want = list(inspect.signature(getattr(KeyedTable, name)).parameters)
+        for cls in (LakeTable, DirTable, IcebergTable):
+            got = list(inspect.signature(getattr(cls, name)).parameters)
+            assert got == want, f"{cls.__name__}.{name}{got} != KeyedTable.{name}{want}"
+
+
+def test_create_on_existing_path_raises(spark, tmp_path, impl):
+    path = str(tmp_path / "t")
+    impl.create(spark, path, SIMPLE, ["id"], n_buckets=4).append(_df(spark, [(1, "a")]))
+    with pytest.raises(FileExistsError):
+        impl.create(spark, path, SIMPLE, ["id"], n_buckets=4)
+    assert [r["v"] for r in impl(spark, path).current().collect()] == ["a"]
 
 
 def test_append_read_current_roundtrip(spark, tmp_path, impl):
@@ -203,12 +226,14 @@ def test_merge_conflicts_on_concurrent_same_bucket_write(spark, tmp_path, impl):
     # a's snapshot is now stale; a raw merge with its old expected view
     # must conflict. Reproduce by monkey-level: use the stale handle's
     # cached state through a no-refresh merge.
-    from etl_framework_spark.cdc.apply import resolve_lww
+    from etl_framework_spark.cdc.apply import resolve_lww_bucketed
 
     with pytest.raises(CommitConflict):
         a.merge(
             c2,
-            resolve=lambda tgt, s: resolve_lww(tgt, s, keys=KEY_COLUMNS),
+            resolve=lambda tgt, s: resolve_lww_bucketed(
+                tgt, s, KEY_COLUMNS, KEY_COLUMNS[0], a.n_buckets
+            ),
             evolve_schema=STORED,
         )
 
