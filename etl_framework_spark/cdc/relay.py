@@ -46,10 +46,12 @@ Design (all set-based, no driver-side row loops):
   mid-history raises :class:`RelayGapError` instead of guessing at
   deletes it can no longer see.
 
-Scale shape: one bucket-pruned full-outer join on the source (the
-feed, persisted so the touched-bucket probe and the merge share one
-computation) plus one copy-on-write merge on the target touching only
-the buckets the fed keys hash to — a steady-state sync costs
+Scale shape: one bucket-pruned diff on the source (the feed) plus one
+merge on the target. A merge-on-read ("replace") target reads the feed
+once, so the sync is one lazy plan from the source diff to the delta
+write. A copy-on-write target touches only the buckets the fed keys
+hash to; its feed is persisted, because the touched-bucket probe and
+the resolver both read it. Either way a steady-state sync costs
 O(touched-bucket data), not O(table); bucket count sets the touched
 fraction. Measured (``scripts/bench_relay.py`` → ``BENCH/relay.json``):
 growing the table 14.6× grows the bootstrap sync 2-4× but the
@@ -138,6 +140,16 @@ def _resolve_replace_mor():
     return resolve
 
 
+def _merges_on_read(t) -> bool:
+    """Whether the relay applies into ``t`` merge-on-read: only with the
+    "replace" fold (newest commit wins). The feed is a STATE diff, so an
+    event-time ("lww") fold would mis-order it — D rows after a
+    source-side GC carry NULL order columns, and a delete_where at the
+    source can legitimately move a key's state to an OLDER (ts, lsn).
+    Any other policy replicates copy-on-write."""
+    return getattr(t, "merge_policy", None) == "replace"
+
+
 def _apply_feed(t, feed: DataFrame, v_from: int, v_to: int, stream_id: str):
     """One read-modify-commit attempt (the ``commit_with_retry`` op).
 
@@ -149,13 +161,7 @@ def _apply_feed(t, feed: DataFrame, v_from: int, v_to: int, stream_id: str):
     re-entry rule as ``apply_changes``."""
     if t.last_epoch(stream_id) >= v_to:
         return None
-    # Merge-on-read only with the "replace" fold (newest commit wins):
-    # the feed is a STATE diff, so an event-time ("lww") fold would
-    # mis-order it — D rows after a source-side GC carry NULL order
-    # columns, and a delete_where at the source can legitimately move a
-    # key's state to an OLDER (ts, lsn). Any other policy replicates
-    # copy-on-write.
-    mor = getattr(t, "merge_policy", None) == "replace"
+    mor = _merges_on_read(t)
     stored_fields = [f for f in feed.schema.fields if f.name != "_change_type"]
     if mor:
         stored_fields.append(T.StructField("_deleted", T.BooleanType(), True))
@@ -217,14 +223,21 @@ def sync_once(src, dst, stream_id: str | None = None) -> int | None:
                 "a fresh target or raise the source retention"
             ) from exc
 
+    def apply(t):
+        return _apply_feed(t, feed, v_from, v_to, stream_id)
+
+    if _merges_on_read(dst):
+        # the delta write reads the feed once: no cache, no count job. A
+        # commit retry recomputes it — the same rows, since the feed
+        # diffs two immutable source versions (the bootstrap feed reads
+        # the files of v_to)
+        return commit_with_retry(dst, apply)
     feed = feed.persist()
     try:
-        # force materialization once; the touched-bucket probe inside
-        # merge and both resolver branches then reuse it
+        # copy-on-write reads the feed twice (the touched-bucket probe
+        # and the resolver): materialize it once
         feed.count()
-        return commit_with_retry(
-            dst, lambda t: _apply_feed(t, feed, v_from, v_to, stream_id)
-        )
+        return commit_with_retry(dst, apply)
     finally:
         feed.unpersist()
 

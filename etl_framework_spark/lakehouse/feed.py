@@ -65,10 +65,10 @@ def delta_fast_path(old_map: dict, new_map: dict, read_files):
     return read_files(added), added
 
 
-#: delta intervals with more rows than this (by the files' parquet
-#: footers) skip the driver-side key extraction and the broadcast
-#: semi-join scope it feeds; the single-pass diff still runs, it just
-#: shuffles the old bucket state instead of O(delta) rows.
+#: delta intervals with more rows than this (by the manifest entries'
+#: recorded ``rows``) skip the driver-side key extraction and the
+#: broadcast semi-join scope it feeds; the single-pass diff still runs,
+#: it just shuffles the old bucket state instead of O(delta) rows.
 LOCAL_KEYS_MAX_ROWS = 1_000_000
 
 
@@ -78,8 +78,10 @@ def _local_delta_keys(table, entries: list[dict], key_columns: list[str]):
     O(delta) bytes, zero Spark jobs — a Spark-side distinct would
     re-scan the delta subtree once per use and pay a stage per job.
     Returns a pandas frame, or None (caller degrades gracefully) when
-    the footers count more than ``LOCAL_KEYS_MAX_ROWS`` rows or any file
-    resists a column-projected read."""
+    the files hold more than ``LOCAL_KEYS_MAX_ROWS`` rows or any file
+    resists a column-projected read. Row counts come from the entries;
+    entries written before they recorded ``rows`` fall back to the
+    files' parquet footers."""
     import os
     from concurrent.futures import ThreadPoolExecutor
 
@@ -88,9 +90,11 @@ def _local_delta_keys(table, entries: list[dict], key_columns: list[str]):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
+        def rows(e, p):
+            return e["rows"] if "rows" in e else pq.read_metadata(p).num_rows
+
         with ThreadPoolExecutor(max_workers=min(16, len(paths))) as ex:
-            footers = list(ex.map(pq.read_metadata, paths))
-            if sum(m.num_rows for m in footers) > LOCAL_KEYS_MAX_ROWS:
+            if sum(ex.map(rows, entries, paths)) > LOCAL_KEYS_MAX_ROWS:
                 return None
             parts = list(
                 ex.map(lambda p: pq.read_table(p, columns=key_columns), paths)
@@ -254,11 +258,16 @@ def diff_versions(
     # update of such a row reported "I" and a delete reported a bogus
     # payload-less "I" instead of "D". U is null-safe for the same
     # reason. (The fast path above classifies identically.)
-    o = old.select(
-        *keys,
-        F.col("_lsn").alias("_old_lsn"),
-        F.lit(True).alias("_old_present"),
-    ).alias("o")
+    # one old row per key, like the fast path's window: a bucket whose
+    # single base commit blind-appended a key twice holds both rows, and
+    # the join would emit one change per duplicate. The aggregate hashes
+    # on the join key, so the join reuses its partitioning.
+    o = (
+        old.groupBy(*keys)
+        .agg(F.max("_lsn").alias("_old_lsn"))
+        .withColumn("_old_present", F.lit(True))
+        .alias("o")
+    )
     n = new.withColumn("_new_present", F.lit(True)).alias("n")
     joined = n.join(o, on=keys, how="full_outer")
     ctype = (

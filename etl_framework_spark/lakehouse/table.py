@@ -184,18 +184,22 @@ def _decode_stat(v):
     return v
 
 
-def file_column_ranges(fp: str, cols: list[str]) -> dict[str, list]:
-    """Per-file min/max for ``cols`` from the parquet footer (no data
-    read — the same metadata Iceberg records in its manifests). Best
-    effort: a column with missing/unusable stats is omitted."""
+def file_footer_meta(fp: str, cols: list[str]) -> dict[str, Any]:
+    """A data file's manifest metadata from its parquet footer (no data
+    read — the same metadata Iceberg records in its manifests): row
+    count ``rows``, file size ``bytes`` and per-column min/max ``stats``
+    for ``cols``. Best effort: an unreadable footer yields only
+    ``bytes``; a column with missing/unusable stats is omitted."""
     import pyarrow.parquet as pq
 
-    out: dict[str, list] = {}
+    out: dict[str, Any] = {"bytes": os.path.getsize(fp)}
     try:
         md = pq.ParquetFile(fp).metadata
     except Exception:
         return out
+    out["rows"] = md.num_rows
     names = {md.schema.column(i).name: i for i in range(md.num_columns)}
+    ranges: dict[str, list] = {}
     for c in cols:
         i = names.get(c)
         if i is None:
@@ -212,23 +216,25 @@ def file_column_ranges(fp: str, cols: list[str]) -> dict[str, list]:
         if ok and lo is not None:
             elo, ehi = _encode_stat(lo), _encode_stat(hi)
             if elo is not None and ehi is not None:
-                out[c] = [elo, ehi]
+                ranges[c] = [elo, ehi]
+    if ranges:
+        out["stats"] = ranges
     return out
 
 
 def collect_file_ranges(
     paths: list[str], cols: list[str], max_workers: int = 16
-) -> dict[str, dict[str, list]]:
-    """Parallel :func:`file_column_ranges` over many files (footer reads
+) -> dict[str, dict[str, Any]]:
+    """Parallel :func:`file_footer_meta` over many files (footer reads
     are IO-bound; the GIL releases inside pyarrow)."""
-    if not paths or not cols:
+    if not paths:
         return {}
     if len(paths) == 1:
-        return {paths[0]: file_column_ranges(paths[0], cols)}
+        return {paths[0]: file_footer_meta(paths[0], cols)}
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=min(max_workers, len(paths))) as ex:
-        results = ex.map(lambda p: (p, file_column_ranges(p, cols)), paths)
+        results = ex.map(lambda p: (p, file_footer_meta(p, cols)), paths)
         return dict(results)
 
 
@@ -442,19 +448,27 @@ def align_to_schema(
     df: DataFrame, schema: T.StructType, keep: list[str] | None = None
 ) -> DataFrame:
     """Project ``df`` onto ``schema``: missing columns become NULL, common
-    columns are cast; ``keep`` names pass-through system columns (e.g.
-    ``_bucket``) preserved verbatim. The Spark analog of the reference's
-    ``_ensure_columns_exist`` + per-column ALTER
+    columns whose type differs are cast; ``keep`` names pass-through
+    system columns (e.g. ``_bucket``) preserved verbatim. A frame that
+    already has exactly that shape (names, order, types) is returned
+    as-is — each projected column costs driver round trips, and the
+    feed and merge paths align mostly frames that already match. The
+    Spark analog of the reference's ``_ensure_columns_exist`` +
+    per-column ALTER
     (reference:src/etl_framework/plugins/loaders/sql_loader.py:115-167)."""
-    have = set(df.columns)
-    cols = [
-        (F.col(f.name).cast(f.dataType) if f.name in have else F.lit(None).cast(f.dataType)).alias(
-            f.name
-        )
-        for f in schema.fields
-    ]
-    cols += [F.col(c) for c in (keep or []) if c in have]
-    return df.select(*cols)
+    shape = [(f.name, f.dataType) for f in df.schema.fields]
+    have = dict(shape)
+    kept = [c for c in (keep or []) if c in have]
+    if shape == [(f.name, f.dataType) for f in schema.fields] + [(c, have[c]) for c in kept]:
+        return df
+
+    def column(f: T.StructField):
+        if have.get(f.name) == f.dataType:
+            return F.col(f.name)
+        src = F.col(f.name) if f.name in have else F.lit(None)
+        return src.cast(f.dataType).alias(f.name)
+
+    return df.select(*[column(f) for f in schema.fields], *[F.col(c) for c in kept])
 
 
 def delete_unreferenced(
@@ -947,16 +961,14 @@ class BucketTable:
         # hundreds of files (buckets x salt groups) and a sequential
         # footer loop measurably taxes the apply hot path; a real
         # deployment computes these executor-side inside the write tasks.
-        ranges = collect_file_ranges([fp for _, fp in files], stats_cols)
+        meta = collect_file_ranges([fp for _, fp in files], stats_cols)
         buckets: dict[str, list[dict[str, Any]]] = {}
         for b, fp in files:
             rel = os.path.relpath(fp, self.path)
             entry: dict[str, Any] = {"path": rel, self.SCHEMA_KEY: schema_ref}
             if kind == "delta":
                 entry["kind"] = "delta"
-            st = ranges.get(fp)
-            if st:
-                entry["stats"] = st
+            entry.update(meta[fp])
             buckets.setdefault(b, []).append(entry)
         return buckets
 

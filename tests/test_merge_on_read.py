@@ -869,7 +869,9 @@ def test_changes_between_classifies_null_lsn_bootstrap_rows(
     row must surface as U and a delete as D — by EXISTENCE, not by
     ``_lsn`` nullness — on BOTH feed paths (pre-fix: the fast path
     dropped the update on a NULL comparison and the slow path reported
-    "I"/a bogus payload-less "I")."""
+    "I"/a bogus payload-less "I"). A blind append can also store one key
+    twice in one commit; both paths must then report ONE change for it
+    (pre-fix: the slow path's join emitted one U per duplicate)."""
     import etl_framework_spark.lakehouse.feed as feed
 
     t = _mk(impl, spark, tmp_path / "t", policy="lww", n_buckets=4)
@@ -878,6 +880,8 @@ def test_changes_between_classifies_null_lsn_bootstrap_rows(
             ("cA", 0, "user", "a0", None, _ts(10)),
             ("cB", 0, "user", "b0", None, _ts(10)),
             ("cC", 0, "user", "c0", None, _ts(10)),
+            ("cD", 0, "user", "d0", None, _ts(10)),
+            ("cD", 0, "user", "d0-dup", None, _ts(11)),
         ],
         TRANSCRIPT_SCHEMA,
     )
@@ -887,23 +891,85 @@ def test_changes_between_classifies_null_lsn_bootstrap_rows(
     rows = [
         ("U", 100, _ts(50), "cA", 0, "user", "a1", None),
         ("D", 101, _ts(51), "cB", 0, None, None, None),
+        ("U", 102, _ts(52), "cD", 0, "user", "d1", None),
     ]
     apply_changes(t, _ch(spark, rows), stream_id="s", epoch_id=0)
     t.refresh()
     assert t.file_stats()["delta_files"] > 0
 
     def classify(df):
-        return {
+        rows = df.collect()
+        out = {
             (r["conv_id"], r["turn_idx"]): (r["_change_type"], r["text"])
-            for r in df.collect()
+            for r in rows
         }
+        assert len(out) == len(rows), f"duplicate keys in the feed: {rows}"
+        return out
 
     fast = classify(t.changes_between(v0, t.version))
     monkeypatch.setattr(feed, "delta_interval_suffix", lambda o, n: None)
     slow = classify(t.changes_between(v0, t.version))
-    expected = {("cA", 0): ("U", "a1"), ("cB", 0): ("D", None)}
+    expected = {
+        ("cA", 0): ("U", "a1"),
+        ("cB", 0): ("D", None),
+        ("cD", 0): ("U", "d1"),
+    }
     assert fast == expected, fast
     assert slow == expected, slow
+
+
+def test_manifest_entries_record_rows_and_bytes(spark, tmp_path, impl, monkeypatch):
+    """Every data file's manifest entry records its parquet row count
+    and size at write time, so the fast path's row bound opens no
+    footer. Entries written before ``rows`` existed fall back to the
+    footers, and both feeds still equal the full diff."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    import etl_framework_spark.lakehouse.feed as feed
+
+    t = _mk(impl, spark, tmp_path / "t", policy="lww", n_buckets=4)
+    log = gen_changes(spark, 1500, seed=41)
+    apply_changes(t, log.where(F.col("lsn") <= 1000), stream_id="s", epoch_id=0)
+    v_base = t.refresh().version
+    apply_changes(t, log.where(F.col("lsn") > 1000), stream_id="s", epoch_id=1)
+    v_head = t.refresh().version
+    entries = [e for fs in t._view().buckets.values() for e in fs]
+    assert any(e.get("kind") == "delta" for e in entries)
+    for e in entries:
+        fp = os.path.join(t.path, e["path"])
+        assert e["rows"] == pq.read_metadata(fp).num_rows
+        assert e["bytes"] == os.path.getsize(fp)
+
+    cols = sorted(t.changes_between(v_base, v_head).columns)
+    rows = lambda df: sorted(tuple(r[c] for c in cols) for r in df.collect())  # noqa: E731
+    plan = lambda df: df._jdf.queryExecution().optimizedPlan().toString()  # noqa: E731
+    with monkeypatch.context() as m:
+        m.setattr(feed, "delta_interval_suffix", lambda o, n: None)
+        full = rows(t.changes_between(v_base, v_head))
+
+    def no_footer(*a, **k):
+        raise AssertionError("footer read on entries that record rows")
+
+    # the key-scoped fast path (its broadcast semi-join) with no footer read
+    with monkeypatch.context() as m:
+        m.setattr(pq, "read_metadata", no_footer)
+        fast = t.changes_between(v_base, v_head)
+        assert "LeftSemi" in plan(fast)
+        assert rows(fast) == full
+    # entries without ``rows``: the bound reads the footers instead
+    real = feed._local_delta_keys
+    monkeypatch.setattr(
+        feed,
+        "_local_delta_keys",
+        lambda table, es, keys: real(
+            table, [{k: v for k, v in e.items() if k != "rows"} for e in es], keys
+        ),
+    )
+    legacy = t.changes_between(v_base, v_head)
+    assert "LeftSemi" in plan(legacy)
+    assert rows(legacy) == full
 
 
 def test_changes_between_spans_schema_evolution(spark, tmp_path, impl):

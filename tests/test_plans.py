@@ -182,3 +182,100 @@ def test_lsn_bounded_read_opens_fewer_files(spark, tmp_path):
     assert [r.conv_id for r in bounded.where(F.col("_lsn") >= 1500).collect()] == [
         "conv-late"
     ]
+
+
+def test_align_to_schema_projects_only_when_the_shape_differs(spark):
+    """A frame that already has the target's names, order and types is
+    returned as the very same object (no per-column cast and alias);
+    otherwise only the columns whose type differs are cast, missing
+    columns become NULL, and ``keep`` columns pass through."""
+    from etl_framework_spark.lakehouse.table import align_to_schema
+
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType(), True),
+            T.StructField("v", T.StringType(), True),
+            T.StructField("n", T.IntegerType(), True),
+        ]
+    )
+    same = spark.createDataFrame([(1, "a", 2)], schema)
+    assert align_to_schema(same, schema) is same
+    with_bucket = same.withColumn("_bucket", F.lit(3))
+    assert align_to_schema(with_bucket, schema, keep=["_bucket"]) is with_bucket
+
+    # an int batch into a long column, one column missing
+    narrow = spark.createDataFrame(
+        [(7, "x")],
+        T.StructType(
+            [
+                T.StructField("id", T.IntegerType(), True),
+                T.StructField("v", T.StringType(), True),
+            ]
+        ),
+    ).withColumn("_bucket", F.lit(1))
+    out = align_to_schema(narrow, schema, keep=["_bucket"])
+    assert [(f.name, f.dataType) for f in out.schema.fields] == [
+        ("id", T.LongType()),
+        ("v", T.StringType()),
+        ("n", T.IntegerType()),
+        ("_bucket", T.IntegerType()),
+    ]
+    assert out.collect() == [(7, "x", None, 1)]
+    project = out._jdf.queryExecution().analyzed().toString()
+    assert "cast(id" in project and "cast(v" not in project
+
+    # an extra column, or the right columns in another order, still
+    # get projected onto the target
+    for df in (same.withColumn("extra", F.lit(0)), same.select("v", "id", "n")):
+        got = align_to_schema(df, schema)
+        assert got is not df
+        assert got.schema == schema
+        assert got.collect() == [(1, "a", 2)]
+
+
+def test_relay_sync_job_counts(spark, tmp_path):
+    """A sync into a merge-on-read ("replace") replica is one lazy plan
+    from the change feed to the delta write: no persisted feed and no
+    count job before the merge. Guards the job count of a delta-only
+    interval (the feed's key-scoped fast path) and of one holding a
+    source compaction (the full diff)."""
+    from etl_framework_spark.cdc import apply_changes, sync_once
+    from etl_framework_spark.datagen import gen_changes
+    from etl_framework_spark.lakehouse import DirTable, LakeTable
+    from etl_framework_spark.schemas import KEY_COLUMNS, TRANSCRIPT_SCHEMA
+
+    stored = T.StructType(
+        TRANSCRIPT_SCHEMA.fields
+        + [
+            T.StructField("_lsn", T.LongType(), True),
+            T.StructField("_deleted", T.BooleanType(), True),
+        ]
+    )
+    src = LakeTable.create(
+        spark, str(tmp_path / "src"), stored, KEY_COLUMNS, n_buckets=8,
+        merge_policy="lww",
+    )
+    dst = DirTable.create(
+        spark, str(tmp_path / "dst"), stored, KEY_COLUMNS, n_buckets=8,
+        merge_policy="replace",
+    )
+    log = gen_changes(spark, 6000, seed=5)
+    epoch = lambda i: log.where(F.col("lsn") % 3 == i)  # noqa: E731
+    apply_changes(src, epoch(0), stream_id="s", epoch_id=0)
+    sync_once(src, dst)
+    sc = spark.sparkContext
+
+    def sync_jobs(group: str) -> int:
+        sc.setJobGroup(group, group)
+        try:
+            assert sync_once(src, dst) is not None
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    apply_changes(src, epoch(1), stream_id="s", epoch_id=1)
+    assert sync_jobs("relay-delta-only") <= 5
+    src.refresh().compact(min_files=2)
+    apply_changes(src, epoch(2), stream_id="s", epoch_id=2)
+    assert sync_jobs("relay-full-diff") <= 4

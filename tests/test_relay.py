@@ -184,6 +184,59 @@ def test_stale_runner_attempt_cannot_regress_replica(spark, tmp_path):
     assert _state(dst) == after_fast == _state(src)
 
 
+@pytest.mark.parametrize("policy", ["replace", None])
+def test_replica_sync_survives_a_commit_retry(spark, tmp_path, monkeypatch, policy):
+    """A sync whose first commit attempt loses the race re-runs its
+    merge. Into a merge-on-read ("replace") replica the feed is never
+    cached: the retry recomputes it from the two immutable source
+    versions. A copy-on-write replica reads its feed twice, so it stays
+    persisted across the attempts and is released after."""
+    import pandas as pd
+
+    from etl_framework_spark.lakehouse import CommitConflict
+    from tests.oracle import replay
+
+    src = LakeTable.create(
+        spark, str(tmp_path / "src"), STORED, KEY_COLUMNS, n_buckets=8,
+        merge_policy="lww",
+    )
+    dst = DirTable.create(
+        spark, str(tmp_path / "dst"), schema=STORED, key_columns=KEY_COLUMNS,
+        n_buckets=4, merge_policy=policy,
+    )
+    full = gen_changes(spark, 3000, seed=31)
+    apply_changes(src, full.where(F.col("lsn") <= 1500), stream_id="s", epoch_id=0)
+    sync_once(src, dst)
+    apply_changes(src, full.where(F.col("lsn") > 1500), stream_id="s", epoch_id=1)
+
+    jsc = spark.sparkContext._jsc
+    cached_before = jsc.getPersistentRDDs().size()
+    cached_at_publish = []
+    real_publish = DirTable._publish
+
+    def flaky_publish(self, *args, **kwargs):
+        cached_at_publish.append(jsc.getPersistentRDDs().size())
+        if len(cached_at_publish) == 1:
+            raise CommitConflict("another writer took the version")
+        return real_publish(self, *args, **kwargs)
+
+    monkeypatch.setattr(DirTable, "_publish", flaky_publish)
+    assert sync_once(src, dst) is not None
+    cached = 0 if policy == "replace" else 1
+    assert cached_at_publish == [cached_before + cached] * 2
+    assert jsc.getPersistentRDDs().size() == cached_before
+    assert (dst.refresh().file_stats()["delta_files"] > 0) == (policy == "replace")
+    assert _state(dst) == _state(src)
+    got = pd.DataFrame(
+        [(r.conv_id, r.turn_idx, r.text, r._lsn) for r in _state(dst)],
+        columns=["conv_id", "turn_idx", "text", "_lsn"],
+    )
+    exp = replay(full.toPandas())[["conv_id", "turn_idx", "text", "_lsn"]]
+    pd.testing.assert_frame_equal(
+        got.reset_index(drop=True), exp.reset_index(drop=True), check_dtype=False
+    )
+
+
 def test_fresh_replica_bootstraps_past_expired_retention(spark, tmp_path):
     """A new replica of a source whose early snapshots were expired
     cannot diff from version 0 — it must fall back to a full-state
