@@ -214,10 +214,9 @@ def detect_skew(
     """Observed-histogram skew probe (north rule: salted repartitioning
     for hot-conversation skew, driven by the DATA, not a caller knob).
 
-    One Bernoulli sample (no shuffle over the batch; the tiny sample is
-    aggregated twice, collapsed into ONE job) yields three estimates,
-    each in units of the average per-task row count
-    (``total / partitions``):
+    One Bernoulli sample (no shuffle over the batch; only the tiny
+    sample is aggregated) yields three estimates, each in units of the
+    average per-task row count (``total / partitions``):
 
     - ``mx``: the hottest FULL key's rows. Above ``threshold`` tasks'
       worth, the bucketed window resolver cannot split it (a key's
@@ -233,8 +232,17 @@ def detect_skew(
     Returns ``{"hot_keys": [Row...], "hot_convs": [value...],
     "salt": int, "key_salt": int | None}``; the hot lists are bounded by
     ``max_keys`` and collected (re-running the small sample scan) ONLY
-    when the corresponding flag fired — the no-skew common case costs
-    exactly one job and one 3-number collect.
+    when the corresponding flag fired — the no-skew common case is one
+    3-number collect.
+
+    Job cost, counted with ``statusTracker`` on a job group (local[4],
+    AQE on, a 200k-event ``gen_changes`` batch, ``partitions=128``): 4
+    Spark jobs (10 stages) with no skew, 7 with a hot conversation, 9
+    with a hot conversation and a hot full key. Under AQE each shuffle
+    stage is submitted as its own job before the result stage: the
+    3-number collect shuffles three times (per key, per conversation,
+    global), the hot-conversation list twice, the hot-key list once.
+    With AQE off the same calls run 1, 2 and 3 jobs.
     """
     import math
 

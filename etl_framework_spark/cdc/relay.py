@@ -53,9 +53,11 @@ write. A copy-on-write target touches only the buckets the fed keys
 hash to; its feed is persisted, because the touched-bucket probe and
 the resolver both read it. Either way a steady-state sync costs
 O(touched-bucket data), not O(table); bucket count sets the touched
-fraction. Measured (``scripts/bench_relay.py`` → ``BENCH/relay.json``):
-growing the table 14.6× grows the bootstrap sync 2-4× but the
-fixed-size delta sync only 1.46× (flat across the last 4× step).
+fraction. Measured by the retired ``scripts/bench_relay.py`` (git
+46b9966, ``BENCH/relay.json``): growing the table 14.6× grows the
+bootstrap sync 2-4× but the fixed-size delta sync only 1.46× (flat
+across the last 4× step). ``cdcbench``'s ``relay_read`` workload now
+runs a merge-on-read replica sync over the fast path and the full diff.
 Reference parity: the reference has no table-to-table sync; this
 mirrors Delta/Iceberg CDF-consumer patterns (``table_changes`` →
 ``MERGE INTO``) as one operator.
@@ -141,13 +143,22 @@ def _resolve_replace_mor():
 
 
 def _merges_on_read(t) -> bool:
-    """Whether the relay applies into ``t`` merge-on-read: only with the
-    "replace" fold (newest commit wins). The feed is a STATE diff, so an
-    event-time ("lww") fold would mis-order it — D rows after a
+    """Whether the relay applies into ``t`` merge-on-read: a "replace"
+    target (newest commit wins) does, a policy-less target replicates
+    copy-on-write — the same choice ``t.merge`` makes from the policy.
+
+    Any other policy raises ``ValueError``. The feed is a STATE diff, so
+    an event-time ("lww") fold would mis-order it — D rows after a
     source-side GC carry NULL order columns, and a delete_where at the
-    source can legitimately move a key's state to an OLDER (ts, lsn).
-    Any other policy replicates copy-on-write."""
-    return getattr(t, "merge_policy", None) == "replace"
+    source can legitimately move a key's state to an OLDER (ts, lsn)."""
+    policy = getattr(t, "merge_policy", None)
+    if policy not in (None, "replace"):
+        raise ValueError(
+            f"relay target {getattr(t, 'path', t)!r} has merge_policy="
+            f"{policy!r}; a replica must be created with "
+            'merge_policy="replace" or none'
+        )
+    return policy == "replace"
 
 
 def _apply_feed(t, feed: DataFrame, v_from: int, v_to: int, stream_id: str):
@@ -169,7 +180,6 @@ def _apply_feed(t, feed: DataFrame, v_from: int, v_to: int, stream_id: str):
     return t.merge(
         feed,
         _resolve_replace_mor() if mor else _resolve_replace(list(t.key_columns)),
-        mode="mor" if mor else "cow",
         evolve_schema=stored,
         summary={
             "operation": "relay",
@@ -195,8 +205,11 @@ def sync_once(src, dst, stream_id: str | None = None) -> int | None:
     Returns the target's new version, or ``None`` if the target is
     already caught up (idempotent — safe to call in a loop or after a
     crash). ``stream_id`` namespaces the watermark; the default embeds
-    the source path so distinct sources never share one.
+    the source path so distinct sources never share one. Raises
+    ``ValueError``, before reading either table, for a target whose
+    ``merge_policy`` is neither ``"replace"`` nor ``None``.
     """
+    mor = _merges_on_read(dst)
     stream_id = stream_id or _default_stream_id(src)
     src = src.refresh()
     v_to = src.version
@@ -226,7 +239,7 @@ def sync_once(src, dst, stream_id: str | None = None) -> int | None:
     def apply(t):
         return _apply_feed(t, feed, v_from, v_to, stream_id)
 
-    if _merges_on_read(dst):
+    if mor:
         # the delta write reads the feed once: no cache, no count job. A
         # commit retry recomputes it — the same rows, since the feed
         # diffs two immutable source versions (the bootstrap feed reads
@@ -347,10 +360,13 @@ def start_relay(
     The daemon works through PRIVATE handles re-opened from the ones
     passed in (table objects are not thread-safe; the FORMATS are, via
     optimistic commits) — the caller's handles are never touched, so
-    they stay safe to use on the calling thread.
+    they stay safe to use on the calling thread. A target
+    ``sync_once`` would reject raises ``ValueError`` here, before the
+    thread starts.
     """
     import threading
 
+    _merges_on_read(dst)
     stream_id = stream_id or _default_stream_id(src)
     stop = threading.Event()
     state: dict = {"rounds": 0, "stream_id": stream_id}

@@ -39,10 +39,10 @@ Design notes (per-method mapping in ``docs/ICEBERG_ADAPTER.md``):
   resolver emitted). Iceberg's optimistic commit surfaces concurrent
   overlapping writers as ``CommitFailedException``/``ValidationException``
   — re-raised as :class:`CommitConflict` so ``commit_with_retry``
-  works unchanged. ``merge_policy`` tables are NOT supported here:
+  works unchanged. Merges are copy-on-write only: ``merge_policy``
+  tables are NOT supported here (``create`` rejects one), because
   Iceberg's own row-level operations (``MERGE INTO`` with
-  merge-on-read v2 deletes) are the native analog; asking for
-  ``mode="mor"`` raises rather than emulating it badly.
+  merge-on-read v2 deletes) are the native analog.
 - **changes_between** diffs the two versions' live file lists from the
   ``<t>.files`` metadata table per bucket partition (the same
   identical-files ⇒ identical-content pruning the in-repo formats use)
@@ -489,17 +489,11 @@ class IcebergTable:
         evolve_schema: T.StructType | None = None,
         summary: dict | None = None,
         epoch: tuple[str, int] | None = None,
-        mode: str | None = None,
     ) -> int | None:
         """Copy-on-write merge: resolve against the touched buckets,
         dynamic-partition-overwrite exactly those bucket partitions.
         Concurrent overlapping commits surface as ``CommitConflict``
         (Iceberg validation), honoring ``commit_with_retry``."""
-        if mode == "mor":
-            raise ValueError(
-                "IcebergTable does not emulate merge-on-read; use Iceberg's "
-                "native MERGE INTO (v2 deletes) for that path"
-            )
         self.refresh()  # epoch pre-check + etl.version stamp need HEAD
         if epoch is not None and epoch[1] <= self.last_epoch(epoch[0]):
             return None

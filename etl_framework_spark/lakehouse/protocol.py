@@ -107,16 +107,16 @@ class KeyedTable(Protocol):
         evolve_schema: T.StructType | None = None,
         summary: dict | None = None,
         epoch: tuple[str, int] | None = None,
-        mode: str | None = None,
     ) -> int | None:
         """Keyed merge; ``resolve(target_subset, source)`` owns row
         semantics, the table owns IO minimization + atomic publication +
-        optimistic-concurrency preconditions. ``mode`` picks the
-        physical strategy: ``"cow"`` rewrites touched buckets;
-        ``"mor"`` appends resolved delta files folded at read
-        (``resolve`` then receives an EMPTY target and must emit
-        tombstones for deletes). Default follows ``merge_policy``.
-        MoR merges return ``None`` when ``epoch`` was already applied.
+        optimistic-concurrency preconditions. The table's
+        ``merge_policy`` alone picks the physical strategy: without one
+        the merge rewrites touched buckets (copy-on-write); with one it
+        appends resolved delta files folded at read (merge-on-read —
+        ``resolve`` then receives an EMPTY target and must emit
+        tombstones for deletes). MoR merges return ``None`` when
+        ``epoch`` was already applied.
         A CoW merge that finds a touched bucket rewritten concurrently
         raises ``CommitConflict`` (re-run via ``commit_with_retry``)."""
         ...

@@ -1079,21 +1079,20 @@ class BucketTable:
         evolve_schema: T.StructType | None = None,
         summary: dict[str, Any] | None = None,
         epoch: tuple[str, int] | None = None,
-        mode: str | None = None,
     ) -> int | None:
-        """Keyed MERGE. Two physical strategies behind one semantic:
+        """Keyed MERGE. Two physical strategies behind one semantic; the
+        table's ``merge_policy`` alone picks one:
 
-        - ``mode="cow"`` (copy-on-write, the default for tables created
-          without a ``merge_policy``): read only the buckets ``source``
-          touches, apply ``resolve(target_subset, source)``, rewrite
-          those buckets, carry every other bucket forward by reference.
-        - ``mode="mor"`` (merge-on-read, the default when the table has
-          a ``merge_policy``): ``resolve`` runs against an EMPTY target
-          (it must emit self-contained rows — per-key winners with
-          delete TOMBSTONES, never physical drops) and the result is
-          committed as per-epoch DELTA files appended to the touched
-          buckets. No target read, no bucket rewrite: write cost is
-          O(batch) regardless of bucket size. Reads fold the deltas per
+        - copy-on-write (no ``merge_policy``): read only the buckets
+          ``source`` touches, apply ``resolve(target_subset, source)``,
+          rewrite those buckets, carry every other bucket forward by
+          reference.
+        - merge-on-read (any ``merge_policy``): ``resolve`` runs
+          against an EMPTY target (it must emit self-contained rows —
+          per-key winners with delete TOMBSTONES, never physical drops)
+          and the result is committed as per-epoch DELTA files appended
+          to the touched buckets. No target read, no bucket rewrite:
+          write cost is O(batch) regardless of bucket size. Reads fold the deltas per
           the table's policy; ``compact`` collapses them back to base.
           Returns ``None`` when ``epoch`` was already applied (the
           in-commit ledger check — appends have no bucket preconditions
@@ -1117,9 +1116,7 @@ class BucketTable:
         conflict.
         """
         ref, schema = self._ensure_schema(evolve_schema or source.schema)
-        if mode is None:
-            mode = "mor" if self.merge_policy else "cow"
-        if mode == "mor":
+        if self.merge_policy:
             empty = align_to_schema(self.spark.createDataFrame([], schema), schema)
             resolved = resolve(empty, source)
             aligned = merge_salt_groups(

@@ -35,6 +35,14 @@ from etl_framework_spark.lakehouse.table import LakeTable
 
 log = logging.getLogger(__name__)
 
+#: epoch-cadence maintenance (``maintenance_every``): compact buckets
+#: holding at least this many files, then expire all but the newest
+#: ``EXPIRE_KEEP_LAST`` snapshots, deleting unreferenced files only
+#: once they are older than ``EXPIRE_GRACE_SECONDS``
+COMPACT_MIN_FILES = 4
+EXPIRE_KEEP_LAST = 50
+EXPIRE_GRACE_SECONDS = 3600
+
 
 def start_ingest(
     spark: SparkSession,
@@ -48,9 +56,6 @@ def start_ingest(
     processing_time: str = "5 seconds",
     on_batch: Callable[[int], None] | None = None,
     maintenance_every: int = 0,
-    compact_min_files: int = 4,
-    expire_keep_last: int = 50,
-    expire_grace_seconds: int = 3600,
     table_factory: Callable[[SparkSession, str], "LakeTable"] | None = None,
     maintenance_max_files: int = 0,
 ) -> StreamingQuery:
@@ -67,8 +72,10 @@ def start_ingest(
     concurrent case):
 
     - ``maintenance_every=N`` (0 = off): every N applied epochs run
-      ``compact`` (copy-on-write, ``keep_fresh`` conflict policy — safe
-      next to any writer) and ``expire_snapshots`` (bounds the version
+      ``compact(min_files=COMPACT_MIN_FILES)`` (copy-on-write,
+      ``keep_fresh`` conflict policy — safe next to any writer) and
+      ``expire_snapshots(keep_last=EXPIRE_KEEP_LAST,
+      grace_seconds=EXPIRE_GRACE_SECONDS)`` (bounds the version
       directory, which otherwise grows one file per epoch forever).
     - ``maintenance_max_files=M`` (0 = off): STATS-DRIVEN compaction —
       every epoch consults ``table.file_stats()`` (metadata only) and
@@ -115,10 +122,9 @@ def start_ingest(
         if maintenance_every > 0 and int(epoch_id) > 0 and int(epoch_id) % maintenance_every == 0:
             try:
                 if not stats_mode:
-                    table.refresh().compact(min_files=compact_min_files)
+                    table.refresh().compact(min_files=COMPACT_MIN_FILES)
                 table.refresh().expire_snapshots(
-                    keep_last=expire_keep_last,
-                    grace_seconds=expire_grace_seconds,
+                    keep_last=EXPIRE_KEEP_LAST, grace_seconds=EXPIRE_GRACE_SECONDS
                 )
             except Exception as e:  # best-effort; the stream must not die
                 log.warning("maintenance skipped: %r", e, exc_info=True)

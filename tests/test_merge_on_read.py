@@ -388,10 +388,13 @@ def test_relay_into_mor_replica_matches_source(spark, tmp_path, impl):
     assert _state(dst) == {("c1", 0): ("older-rebirth", 3)}
 
 
-def test_relay_into_lww_target_falls_back_to_cow(spark, tmp_path):
+def test_relay_rejects_an_lww_target(spark, tmp_path, monkeypatch):
     """An event-time ("lww") fold cannot apply a state diff (NULL-order
-    D rows, post-GC regressions) — the relay must route such targets
-    through copy-on-write, never write mis-ordered deltas."""
+    D rows, post-GC regressions), and a relay target's policy alone
+    picks its merge path — so ``sync_once`` and ``start_relay`` refuse
+    such a target before reading either table."""
+    from etl_framework_spark.cdc import start_relay
+
     src = _mk(LakeTable, spark, tmp_path / "src", policy="lww")
     dst = _mk(LakeTable, spark, tmp_path / "dst", policy="lww", n_buckets=4)
     apply_changes(
@@ -400,10 +403,17 @@ def test_relay_into_lww_target_falls_back_to_cow(spark, tmp_path):
         stream_id="s",
         epoch_id=0,
     )
-    sync_once(src, dst)
-    assert dst.refresh().file_stats()["delta_files"] == 0, "must be CoW"
-    src.refresh().delete_where(F.col("conv_id") == "c1")
-    sync_once(src, dst)
+    before = dst.refresh().version
+
+    def no_read(*args, **kwargs):
+        raise AssertionError("the source must not be read")
+
+    monkeypatch.setattr(LakeTable, "changes_between", no_read)
+    with pytest.raises(ValueError, match="merge_policy"):
+        sync_once(src, dst)
+    with pytest.raises(ValueError, match="merge_policy"):
+        start_relay(src, dst, poll_interval_s=0.05)
+    assert LakeTable(spark, dst.path).version == before
     assert _state(dst) == {}
 
 

@@ -14,6 +14,7 @@ from etl_framework_spark.cdc import apply_changes  # noqa: F401 (api surface)
 from etl_framework_spark.datagen import write_change_log
 from etl_framework_spark.lakehouse import LakeTable
 from etl_framework_spark.schemas import CHANGE_SCHEMA, KEY_COLUMNS, TRANSCRIPT_SCHEMA
+from etl_framework_spark.streaming import ingest as ingest_mod
 from etl_framework_spark.streaming import run_to_completion, start_ingest
 
 from tests.oracle import replay
@@ -339,7 +340,7 @@ def test_chaos_soak_ingest_compact_expire_evolve(spark, tmp_path):
     assert epochs == sorted(set(epochs)), f"non-monotone epochs: {epochs}"
 
 
-def test_inline_maintenance_compacts_and_expires(spark, tmp_path):
+def test_inline_maintenance_compacts_and_expires(spark, tmp_path, monkeypatch):
     """maintenance_every: the ingest daemon compacts fragmented buckets
     and expires old snapshots between epochs without changing results."""
     change_dir = str(tmp_path / "changes")
@@ -353,11 +354,12 @@ def test_inline_maintenance_compacts_and_expires(spark, tmp_path):
         .parquet(change_dir)
         .toPandas()
     )
+    monkeypatch.setattr(ingest_mod, "COMPACT_MIN_FILES", 2)
+    monkeypatch.setattr(ingest_mod, "EXPIRE_KEEP_LAST", 5)
+    monkeypatch.setattr(ingest_mod, "EXPIRE_GRACE_SECONDS", 3600)
     q = start_ingest(
         spark, table_path, change_dir, ckpt, CHANGE_SCHEMA,
-        stream_id="maint", max_files_per_trigger=1,
-        maintenance_every=3, compact_min_files=2,
-        expire_keep_last=5, expire_grace_seconds=3600,
+        stream_id="maint", max_files_per_trigger=1, maintenance_every=3,
     )
     q.awaitTermination()
     assert_matches_oracle(spark, table_path, all_pdf)

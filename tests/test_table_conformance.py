@@ -11,6 +11,7 @@ change" — is executable, not aspirational.
 from __future__ import annotations
 
 import inspect
+import os
 import threading
 
 import pandas as pd
@@ -377,3 +378,97 @@ def test_changes_between_matches_state_diff(spark, tmp_path, impl):
     feed = t.changes_between(v1, v2).where("_change_type != 'D'").collect()
     for r in feed:
         assert r["text"] == s2.loc[(r["conv_id"], r["turn_idx"]), "text"]
+
+
+# ------------------------------------------------------------ crash points
+
+
+def _assert_oracle_state(t, pdf):
+    got = (
+        t.refresh()
+        .current()
+        .select("conv_id", "turn_idx", "text", "_lsn")
+        .toPandas()
+        .sort_values(["conv_id", "turn_idx"])
+        .reset_index(drop=True)
+    )
+    exp = replay(pdf)[["conv_id", "turn_idx", "text", "_lsn"]]
+    pd.testing.assert_frame_equal(got, exp.reset_index(drop=True), check_dtype=False)
+
+
+def _two_epochs(spark, path, impl, merge_policy=None):
+    """A table holding epoch 0 of a two-epoch log; returns the table,
+    the epoch-1 batch and the whole log as pandas."""
+    t = impl.create(
+        spark, path, STORED, KEY_COLUMNS, n_buckets=8, merge_policy=merge_policy
+    )
+    changes = gen_changes(spark, 3000, seed=11)
+    apply_changes(t, changes.where(F.col("lsn") <= 1500), stream_id="s", epoch_id=0)
+    return t, changes.where(F.col("lsn") > 1500), changes.toPandas()
+
+
+@pytest.mark.parametrize("merge_policy", [None, "lww"])
+def test_crash_between_data_write_and_publish(
+    spark, tmp_path, impl, monkeypatch, merge_policy
+):
+    """A non-conflict failure after the apply's data files landed but
+    before its version was published: the apply raises, the table still
+    shows the pre-apply version with no ledger entry for the epoch, and
+    re-applying the same epoch lands it exactly once."""
+    path = str(tmp_path / "t")
+    t, batch, pdf = _two_epochs(spark, path, impl, merge_policy)
+    pre = t.refresh().version
+    landed = []
+    write_data = impl._write_data
+
+    def write_then_record(self, *args, **kwargs):
+        entries = write_data(self, *args, **kwargs)
+        landed.extend(e["path"] for fs in entries.values() for e in fs)
+        return entries
+
+    def publish_fails(self, *args, **kwargs):
+        assert landed and all(
+            os.path.exists(os.path.join(self.path, p)) for p in landed
+        ), "the data files must be on disk before the publish fails"
+        raise OSError("injected: crash before publish")
+
+    monkeypatch.setattr(impl, "_write_data", write_then_record)
+    monkeypatch.setattr(impl, "_publish", publish_fails)
+    with pytest.raises(OSError, match="crash before publish"):
+        apply_changes(t, batch, stream_id="s", epoch_id=1)
+    monkeypatch.undo()
+
+    fresh = impl(spark, path)
+    assert fresh.version == pre
+    assert fresh.last_epoch("s") == 0
+    assert apply_changes(fresh, batch, stream_id="s", epoch_id=1) == pre + 1
+    _assert_oracle_state(fresh, pdf)
+    assert apply_changes(impl(spark, path), batch, stream_id="s", epoch_id=1) is None
+    assert impl(spark, path).version == pre + 1
+
+
+def test_crash_between_publish_and_latest_hint(spark, tmp_path, monkeypatch):
+    """LakeTable: a crash after the version file is published but before
+    the LATEST hint moves. The hint now lags; a fresh handle still finds
+    the new version by probing forward, sees the epoch in its ledger,
+    and a re-apply is a no-op."""
+    path = str(tmp_path / "t")
+    t, batch, pdf = _two_epochs(spark, path, LakeTable)
+    pre = t.refresh().version
+
+    def hint_fails(self, version):
+        raise OSError("injected: crash before the LATEST hint")
+
+    monkeypatch.setattr(LakeTable, "_write_latest_hint", hint_fails)
+    with pytest.raises(OSError, match="LATEST hint"):
+        apply_changes(t, batch, stream_id="s", epoch_id=1)
+    monkeypatch.undo()
+
+    with open(os.path.join(path, "_meta", "LATEST")) as f:
+        assert int(f.read()) == pre, "the hint must lag the published version"
+    fresh = LakeTable(spark, path)
+    assert fresh.version == pre + 1
+    assert fresh.last_epoch("s") == 1
+    assert apply_changes(fresh, batch, stream_id="s", epoch_id=1) is None
+    assert fresh.refresh().version == pre + 1
+    _assert_oracle_state(fresh, pdf)
